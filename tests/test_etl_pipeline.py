@@ -5,10 +5,11 @@ mechanism 1 — golden-file-by-git)."""
 from __future__ import annotations
 
 import glob
+import weakref
 
 import pytest
 
-from turnover_odata_etl_spark.etl import ETLConfig, run_etl, sink_csv
+from turnover_odata_etl_spark.etl import ETLConfig, extract, run_etl, sink_csv
 from turnover_odata_etl_spark.sources.mock_server import MockOData
 
 WIRE_ROWS = [
@@ -106,3 +107,41 @@ def test_run_etl_raw_parity_mode(spark, mock_server):
     df = run_etl(spark, cfg)
     r44 = {r["Employee ID"]: r for r in df.collect()}["44"]
     assert r44["Date From"] == "/Date(1776729600000)/"
+
+
+def test_extract_plans_at_most_default_parallelism_partitions(spark):
+    """More structure values than cores pack into at most
+    defaultParallelism scan partitions, and every row still arrives."""
+    n_values = spark.sparkContext.defaultParallelism + 3
+    rows = [
+        {**WIRE_ROWS[0], "CEMPLOYEE_UUID": str(i), "COCHAR_STRUCTURE": f"S{i % n_values:02d}"}
+        for i in range(3 * n_values)
+    ]
+    m = MockOData(rows, FIELDS, version=2, page_size=2)
+    m.start()
+    try:
+        cfg = ETLConfig(base_url=m.base_url, entity="Turnover")
+        scan = extract(spark, cfg)
+        assert 1 < scan.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+        out = run_etl(spark, cfg)
+        assert sorted(int(r["Employee ID"]) for r in out.collect()) == list(range(3 * n_values))
+    finally:
+        m.stop()
+
+
+def test_extract_registers_source_once_per_session(spark, mock_server, monkeypatch):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from turnover_odata_etl_spark import etl
+
+    calls = []
+    real = DataSourceRegistration.register
+    monkeypatch.setattr(etl, "_REGISTERED", weakref.WeakSet())
+    monkeypatch.setattr(
+        DataSourceRegistration, "register",
+        lambda self, ds: (calls.append(ds), real(self, ds))[1],
+    )
+    cfg = ETLConfig(base_url=mock_server.base_url, entity="Turnover")
+    extract(spark, cfg)
+    extract(spark, cfg)
+    assert len(calls) == 1

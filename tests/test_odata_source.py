@@ -7,6 +7,8 @@ per-partition skip-and-continue, filter pushdown reaching the wire.
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +21,10 @@ from turnover_odata_etl_spark.sources.odata_client import (
     extract_missing_segment,
     extract_results_and_next,
 )
-from turnover_odata_etl_spark.sources.odata_source import ODataDataSource
+from turnover_odata_etl_spark.sources.odata_source import (
+    ODataDataSource,
+    pack_values,
+)
 
 ROWS = [
     {"Employee": "alice", "Structure": "S1", "K": "1"},
@@ -107,13 +112,50 @@ def test_client_error_context(mock_v2):
 
 def test_distinct_values_sorted_nonempty(mock_v2):
     client = ODataClient(mock_v2.base_url)
-    # empty-string structure is dropped (truthiness filter, etl.py:135)
-    assert client.distinct_values("Emp", "Structure") == [
-        "O'HARA",
-        "S1",
-        "S2",
-        "S3",
-    ]
+    # empty-string structure is dropped (truthiness filter, etl.py:135);
+    # each value carries its row count, in value order
+    counts = client.value_counts("Emp", "Structure")
+    assert counts == {"O'HARA": 1, "S1": 2, "S2": 2, "S3": 1}
+    assert list(counts) == ["O'HARA", "S1", "S2", "S3"]
+
+
+def test_discovery_warns_at_top_ceiling(mock_v2, caplog):
+    """Values first appearing past the $top ceiling get no partition:
+    reaching the ceiling must be a WARNING naming entity, field and
+    ceiling; staying under it must not warn."""
+    client = ODataClient(mock_v2.base_url)
+    logger = "turnover_odata_etl_spark.sources.odata_client"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        assert client.value_counts("Emp", "Structure", top=3) == {"S1": 2, "S2": 1}
+    (rec,) = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert "Emp" in rec.getMessage() and "Structure" in rec.getMessage()
+    assert "$top=3" in rec.getMessage()
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=logger):
+        client.value_counts("Emp", "Structure", top=8)
+    assert not [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert any("%24top=3" in r for r in mock_v2.requests)
+
+
+def test_pack_values_balanced_heaviest_first_deterministic():
+    counts = {"a": 1, "b": 10, "c": 50, "d": 5, "e": 30, "f": 10, "g": 20}
+    groups = pack_values(counts, 3)
+    # heaviest first into the lightest group (ties: lower value, lower index)
+    assert groups == [["c"], ["e", "f"], ["g", "b", "d", "a"]]
+    loads = [sum(counts[v] for v in g) for g in groups]
+    assert max(loads) - min(loads) <= max(counts.values())
+    assert sorted(v for g in groups for v in g) == sorted(counts)
+    for g in groups:
+        assert [counts[v] for v in g] == sorted((counts[v] for v in g), reverse=True)
+    # input order does not matter
+    assert pack_values(dict(reversed(list(counts.items()))), 3) == groups
+    # one dominant value gets a group to itself
+    skew = {"z": 1000, **{f"s{i}": 1 for i in range(5)}}
+    assert pack_values(skew, 2) == [["z"], ["s0", "s1", "s2", "s3", "s4"]]
+    # never more groups than values; n >= values is one group per value
+    for n in (4, 7, 8, None):
+        assert pack_values({"y": 1, "x": 9}, n) == [["x"], ["y"]]
+    assert pack_values({}, 3) == []
 
 
 # -- Spark data source ------------------------------------------------------
@@ -208,6 +250,43 @@ def test_source_skip_bad_partition(spark):
         assert {r.Employee for r in good.collect()} == {"alice", "bob", "erin", "grace"}
         with pytest.raises(Exception):
             _read(spark, m, partitionField="Structure").collect()
+    finally:
+        m.stop()
+
+
+def test_source_packed_partitions_read_same_rows(spark, mock_v2):
+    unpacked = _read(spark, mock_v2, partitionField="Structure")
+    packed = _read(spark, mock_v2, partitionField="Structure", numPartitions="2")
+    assert packed.rdd.getNumPartitions() == 2
+    assert sorted(packed.collect()) == sorted(unpacked.collect())
+    assert packed.count() == 6
+
+
+def test_source_pushed_key_equality_prunes_without_discovery(spark, mock_v2):
+    df = _read(
+        spark, mock_v2, partitionField="Structure", numPartitions="2"
+    ).filter(F.col("Structure") == "S1")
+    assert df.rdd.getNumPartitions() == 1
+    assert sorted(r.Employee for r in df.collect()) == ["alice", "bob"]
+    assert not any("top" in req for req in mock_v2.requests), mock_v2.requests
+
+
+@pytest.mark.parametrize("prefetch", ["true", "false"])
+def test_source_skip_bad_partition_packed(spark, prefetch):
+    """With every key value packed into one task, skip-and-continue
+    still isolates the failing value, not the task."""
+    m = MockOData(
+        ROWS, FIELDS, version=2, page_size=3,
+        fail_field="Structure", fail_values={"S2"},
+    )
+    m.start()
+    try:
+        opts = dict(partitionField="Structure", numPartitions="1", prefetch=prefetch)
+        good = _read(spark, m, skipBadPartitions="true", **opts)
+        assert good.rdd.getNumPartitions() == 1
+        assert {r.Employee for r in good.collect()} == {"alice", "bob", "erin", "grace"}
+        with pytest.raises(Exception):
+            _read(spark, m, **opts).collect()
     finally:
         m.stop()
 
@@ -341,6 +420,123 @@ def test_coerce_value_date_ms_exact_at_max_date_sentinel():
     # pre-epoch stays exact under divmod floor semantics
     neg = _coerce_value("/Date(-86400001)/", "timestamp")
     assert neg == datetime(1969, 12, 30, 23, 59, 59, 999000, tzinfo=timezone.utc)
+
+
+# -- Arrow boundary: wire page -> RecordBatch --------------------------------
+
+# Every type edm_to_spark_ddl emits, with the EDM type that maps to it.
+MATRIX_TYPES = {
+    "S": ("Edm.String", "string"),
+    "I": ("Edm.Int32", "int"),
+    "B": ("Edm.Int64", "bigint"),
+    "H": ("Edm.Int16", "smallint"),
+    "T": ("Edm.SByte", "tinyint"),
+    "D": ("Edm.Double", "double"),
+    "F": ("Edm.Single", "float"),
+    "Z": ("Edm.Boolean", "boolean"),
+    "TS": ("Edm.DateTime", "timestamp"),
+    "DT": ("Edm.Date", "date"),
+    "BIN": ("Edm.Binary", "binary"),
+}
+MATRIX_ROWS = [
+    {"S": "alice", "I": "1", "B": "9007199254740993", "H": "-7", "T": "3",
+     "D": "2.5", "F": "0.25", "Z": "true", "TS": "/Date(1481853600000)/",
+     "DT": "2016-12-16", "BIN": "aGk="},
+    # V4 native JSON scalars; an offset /Date(ms+hhmm)/ wrapper
+    {"S": 5, "I": 2, "B": -9007199254740993, "H": 300, "T": -128,
+     "D": 1e300, "F": -1.5, "Z": False, "TS": "/Date(1481853600000+0100)/",
+     "DT": "2016-12-17T00:00:00Z", "BIN": ""},
+    # ISO with and without an offset; boolean under a string column
+    {"S": True, "I": "42.0", "B": 0, "H": 0, "T": 0, "D": "-0.0", "F": 3,
+     "Z": "1", "TS": "2016-12-16T03:00:00+01:00", "DT": "1969-12-31",
+     "BIN": "AAH/"},
+    {"S": "x", "TS": "2016-12-16T02:00:00"},  # missing keys read null
+    {k: None for k in MATRIX_TYPES},  # explicit nulls
+]
+
+
+def _matrix_schema():
+    from pyspark.sql import types as T
+
+    spark_types = {
+        t().simpleString(): t()
+        for t in (T.StringType, T.IntegerType, T.LongType, T.ShortType,
+                  T.ByteType, T.DoubleType, T.FloatType, T.BooleanType,
+                  T.TimestampType, T.DateType, T.BinaryType)
+    }
+    return T.StructType(
+        [T.StructField(c, spark_types[t]) for c, (_, t) in MATRIX_TYPES.items()]
+    )
+
+
+def test_page_batch_type_matrix_equals_coerce_value():
+    """The page batch is typed exactly as to_arrow_schema(schema) and
+    holds _coerce_value of each wire value, for every type the
+    $metadata path declares, with nulls, missing keys and an empty
+    page."""
+    from datetime import date, datetime, timezone
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from turnover_odata_etl_spark.sources.odata_source import (
+        _coerce_value,
+        page_batcher,
+    )
+
+    schema = _matrix_schema()
+    to_batch = page_batcher(schema)
+    batch = to_batch(MATRIX_ROWS)
+    assert batch.schema == to_arrow_schema(schema)
+    assert batch.num_rows == len(MATRIX_ROWS)
+    for c, (_, kind) in MATRIX_TYPES.items():
+        want = [_coerce_value(r.get(c), kind) for r in MATRIX_ROWS]
+        if kind == "string":  # non-string JSON renders as the row path did
+            want = ["alice", "5", "true", "x", None]
+        assert batch.column(c).to_pylist() == want, c
+    utc = timezone.utc
+    assert batch.column("B").to_pylist()[:2] == [2**53 + 1, -(2**53 + 1)]
+    # the /Date(ms+hhmm)/ offset is display-only; ISO offsets are instants
+    assert batch.column("TS").to_pylist()[:4] == [
+        datetime(2016, 12, 16, 2, 0, tzinfo=utc),
+        datetime(2016, 12, 16, 2, 0, tzinfo=utc),
+        datetime(2016, 12, 16, 2, 0, tzinfo=utc),
+        datetime(2016, 12, 16, 2, 0, tzinfo=utc),
+    ]
+    assert batch.column("DT").to_pylist()[:3] == [
+        date(2016, 12, 16), date(2016, 12, 17), date(1969, 12, 31)
+    ]
+    assert batch.column("BIN").to_pylist()[:3] == [b"hi", b"", b"\x00\x01\xff"]
+    assert batch.column("Z").to_pylist()[:3] == [True, False, True]
+    empty = to_batch([])
+    assert empty.num_rows == 0 and empty.schema == batch.schema
+
+
+def test_source_usemetadata_type_matrix_end_to_end(spark):
+    """The same matrix through a useMetadata=true read: the typed
+    schema comes from $metadata and every value lands as the page
+    batch has it."""
+    from turnover_odata_etl_spark.sources.odata_source import page_batcher
+
+    m = MockOData(
+        MATRIX_ROWS, list(MATRIX_TYPES), version=4, page_size=2,
+        field_types={c: edm for c, (edm, _) in MATRIX_TYPES.items()},
+    )
+    m.start()
+    try:
+        spark.dataSource.register(ODataDataSource)
+        df = (
+            spark.read.format("odata")
+            .option("url", m.base_url)
+            .option("entity", "Emp")
+            .option("useMetadata", "true")
+            .load()
+        )
+        assert df.dtypes == [(c, t) for c, (_, t) in MATRIX_TYPES.items()]
+        got = df.toArrow().to_pylist()
+        want = page_batcher(_matrix_schema())(MATRIX_ROWS).to_pylist()
+        assert got == want
+    finally:
+        m.stop()
 
 
 def test_odata_date_decode_offset_and_malformed(spark):

@@ -28,6 +28,7 @@ import time
 import urllib.error
 import urllib.parse
 import urllib.request
+from collections import Counter
 from collections.abc import Iterator
 from typing import Any
 
@@ -513,15 +514,26 @@ class ODataClient:
             f"none of the candidate fields {candidates} exist on {entity!r}"
         ) from last_error
 
-    def distinct_values(
+    def value_counts(
         self, entity: str, field: str, top: int = 1_000_000
-    ) -> list[str]:
-        """Sorted distinct non-empty values of one field — the
-        partition-key discovery step (etl.py:124-138) [A1+O1+F2]."""
-        values: set[str] = set()
-        for page in self.fetch_pages(entity, select=field, top=top):
-            for row in page:
-                v = row.get(field)
-                if v:
-                    values.add(v)
-        return sorted(values)
+    ) -> dict[str, int]:
+        """Rows per distinct non-empty value of one field, in value
+        order — the partition-key discovery step (etl.py:124-138)
+        [A1+O1+F2]; the counts weight the scan's partition packing.
+
+        ``top`` keeps the reference's "effectively all" ceiling [O2].
+        When the rows seen reach it, values that first appear past it
+        get no partition and their rows never reach the scan, so that
+        logs a WARNING."""
+        counts: Counter[str] = Counter()
+        seen = 0
+        for page in self.fetch_pages_prefetched(entity, select=field, top=top):
+            seen += len(page)
+            counts.update(v for row in page if (v := row.get(field)))
+        if seen >= top:
+            log.warning(
+                "key discovery on %s.%s reached its $top=%d ceiling: values "
+                "first appearing past it get no partition and are not read",
+                entity, field, top,
+            )
+        return dict(sorted(counts.items()))
