@@ -50,13 +50,6 @@ class ETLConfig:
     entity: str = ""
     codes_entity: str | None = None  # defaults to entity (as the reference)
     structure_candidates: tuple[str, ...] = ("COCHAR_STRUCTURE", "C0CHAR_STRUCTURE")
-    select_fields: tuple[str, ...] = (
-        "TEMPLOYEE_UUID",
-        "CEMPLOYEE_UUID",
-        "C0DATEFROM",
-        "C0DATETO",
-        "KCLEAVERS",
-    )
     rename_map: dict = field(
         default_factory=lambda: {
             "Employee": "TEMPLOYEE_UUID",

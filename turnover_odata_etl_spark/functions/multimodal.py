@@ -51,27 +51,8 @@ from pyspark.sql import functions as F
 # module was registered for by-value pickling. As module globals,
 # these ride along when a query registers multimodal+jpeg+tiff by
 # value, and the dispatch needs no worker-side import at all.
-from .flac import decode_flac as _dispatch_decode_flac
 from .jpeg import decode_jpeg as _dispatch_decode_jpeg
 from .tiff import decode_tiff as _dispatch_decode_tiff
-
-
-def decode_audio(data: bytes):
-    """Unified audio decode dispatch — the ``decode_image`` of the
-    audio ladder: RIFF/WAVE (16-bit PCM, IMA ADPCM, G.711 µ/A-law —
-    ``decode_wav``) or FLAC (``functions/flac.py``), by magic bytes.
-    Returns ``(samples (n, ch), sample_rate)``; MP3/AAC/Opus raise
-    loudly (external-codec territory). Ship with
-    ``register_codecs_by_value()``."""
-    if data[:4] == b"RIFF":
-        return decode_wav(data)
-    if data[:4] == b"fLaC":
-        return _dispatch_decode_flac(data)
-    raise ValueError(
-        f"unsupported audio format (magic {data[:4]!r}); pure-numpy "
-        "decode covers WAV (PCM/ADPCM/G.711) and FLAC — wire a codec "
-        "library for MP3/AAC/Opus"
-    )
 
 
 def register_codecs_by_value() -> None:

@@ -36,13 +36,3 @@ def odata_date_encode(col: Column | str) -> Column:
     return F.concat(
         F.lit("/Date("), F.unix_millis(c.cast("timestamp")).cast("string"), F.lit(")/")
     )
-
-
-def odata_quote_escape(value: str) -> str:
-    """OData literal quoting for $filter: ``'`` doubles to ``''``.
-
-    Mirrors the reference's client-side escaping (src/etl.py:147) —
-    used by the source connector when rendering pushed-down equality
-    predicates into ``$filter`` strings.
-    """
-    return value.replace("'", "''")

@@ -40,19 +40,6 @@ def char_count(col: Column | str) -> Column:
     return F.length(c).cast("long")
 
 
-def avg_token_length(col: Column | str) -> Column:
-    """Mean token length, 0.0 for empty text; rounded to 2 dp."""
-    toks = tokens(col)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.round(
-        F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0)), 2
-    )
-
-
 def stopword_count(col: Column | str, lang: str = "en") -> Column:
     """Count of word-boundary stopword matches for ``lang``."""
     c = F.col(col) if isinstance(col, str) else col

@@ -28,7 +28,3 @@ def norm(a: Column | str) -> Column:
 
 def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_rounded(a: Column | str, b: Column | str, digits: int = 6) -> Column:
-    return F.round(cosine(a, b), digits)

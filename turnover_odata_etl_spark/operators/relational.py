@@ -90,13 +90,6 @@ def union_by_name(dfs: Sequence[DataFrame]) -> DataFrame:
     )
 
 
-def empty_frame(spark, schema: T.StructType) -> DataFrame:
-    """Empty-input short-circuit with a *declared* schema (the
-    reference returns a schema-less empty pandas frame —
-    src/etl.py:197-199; Spark frames are never schema-less)."""
-    return spark.createDataFrame([], schema)
-
-
 def not_null_non_empty(df: DataFrame, col: str) -> DataFrame:
     """The reference's truthiness filter on the partition key
     (src/etl.py:135): NULL and '' both drop."""

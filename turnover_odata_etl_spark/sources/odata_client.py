@@ -155,6 +155,10 @@ class ODataClient:
     def url_for(self, entity: str) -> str:
         return entity_url(self.base_url, self.service_path, entity)
 
+    def _service_root(self) -> str:
+        """Base URL and service path, joined with single slashes."""
+        return entity_url(self.base_url, self.service_path, "")
+
     def _open_with_retry(
         self, req: urllib.request.Request, url: str
     ) -> tuple[int, bytes]:
@@ -289,10 +293,7 @@ class ODataClient:
         no data rows) — the protocol-complete alternative to the
         candidate-field probe [S3]; parse with
         ``odata_metadata.parse_edmx``."""
-        base = "/".join(
-            p.strip("/") for p in (self.base_url, self.service_path) if p.strip("/")
-        )
-        return self.get_text(f"{base}/$metadata")
+        return self.get_text(f"{self._service_root()}/$metadata")
 
     def fetch_pages(
         self,
@@ -399,10 +400,7 @@ class ODataClient:
         links pass through untouched."""
         if "://" in nxt:
             return nxt
-        base = "/".join(
-            p.strip("/") for p in (self.base_url, self.service_path) if p.strip("/")
-        )
-        return urllib.parse.urljoin(base + "/", nxt)
+        return urllib.parse.urljoin(self._service_root() + "/", nxt)
 
     def fetch_tracked(
         self,
@@ -430,34 +428,17 @@ class ODataClient:
             params["$select"] = select
         if filter_:
             params["$filter"] = filter_
-        url = self.url_for(entity)
         # the preference rides EVERY page request: services track it
         # via the skiptoken, but re-sending is spec-compatible and
         # robust against gateways that evaluate it per-request
-        prefer = {"Prefer": "odata.track-changes"}
-        payload = self.get_json(url, params, headers=prefer)
-        rows_all: list[dict[str, Any]] = []
-        while True:
-            rows, nxt = extract_results_and_next(payload)
-            rows_all.extend(rows)
-            delta = payload.get("@odata.deltaLink") or payload.get(
-                "odata.deltaLink"
-            )
-            if delta:
-                return rows_all, self._resolve_next(delta)
-            if not nxt:
-                raise ODataError(
-                    200, url,
-                    "tracked read ended without @odata.deltaLink — the "
-                    "service ignored Prefer: odata.track-changes (V2 "
-                    "gateway or non-tracking entity set); use the "
-                    "order-column incremental stream instead",
-                )
-            if self.pause:
-                time.sleep(self.pause)
-            payload = self.get_json(
-                self._resolve_next(nxt), headers=prefer
-            )
+        return self._walk_to_delta_link(
+            self.url_for(entity), params,
+            {"Prefer": "odata.track-changes"},
+            "tracked read ended without @odata.deltaLink — the "
+            "service ignored Prefer: odata.track-changes (V2 "
+            "gateway or non-tracking entity set); use the "
+            "order-column incremental stream instead",
+        )
 
     def fetch_delta(
         self, delta_link: str
@@ -472,24 +453,37 @@ class ODataClient:
         advanced cursor to persist for the next sync. Paginated deltas
         (``@odata.nextLink`` inside the delta stream) are followed to
         the final page, which per spec carries the new delta link."""
-        changes: list[dict[str, Any]] = []
-        payload = self.get_json(delta_link)
+        return self._walk_to_delta_link(
+            delta_link, None, None,
+            "delta read ended without a new @odata.deltaLink",
+        )
+
+    def _walk_to_delta_link(
+        self,
+        url: str,
+        params: dict[str, str] | None,
+        headers: dict[str, str] | None,
+        missing: str,
+    ) -> tuple[list[dict[str, Any]], str]:
+        """GET ``url`` and follow its next links, with ``headers`` on
+        every page, to the page that carries the (absolutized) delta
+        link: ``(rows in wire order, delta_link)``. A chain that ends
+        without one raises ``ODataError(200, url, missing)``."""
+        rows_all: list[dict[str, Any]] = []
+        payload = self.get_json(url, params, headers=headers)
         while True:
             rows, nxt = extract_results_and_next(payload)
-            changes.extend(rows)
+            rows_all.extend(rows)
             delta = payload.get("@odata.deltaLink") or payload.get(
                 "odata.deltaLink"
             )
             if delta:
-                return changes, self._resolve_next(delta)
+                return rows_all, self._resolve_next(delta)
             if not nxt:
-                raise ODataError(
-                    200, delta_link,
-                    "delta read ended without a new @odata.deltaLink",
-                )
+                raise ODataError(200, url, missing)
             if self.pause:
                 time.sleep(self.pause)
-            payload = self.get_json(self._resolve_next(nxt))
+            payload = self.get_json(self._resolve_next(nxt), headers=headers)
 
     def probe_field(self, entity: str, candidates: list[str]) -> str:
         """First candidate field the entity actually has, discovered by

@@ -1564,6 +1564,21 @@ class SnapshotTable:
         while len(self._metacache) > 256:
             self._metacache.pop(next(iter(self._metacache)))
 
+    def _retry(self, label: str, once, max_retries: int) -> int:
+        """The optimistic-concurrency loop every committing verb runs:
+        call ``once()`` — one full plan + commit attempt — and on a
+        lost CAS (``CommitConflict``) re-plan on the new current, up
+        to ``max_retries`` attempts."""
+        last: Exception | None = None
+        for _ in range(max_retries):
+            try:
+                return once()
+            except CommitConflict as e:  # re-plan on the new current
+                last = e
+        raise RuntimeError(
+            f"{label} lost the commit race {max_retries} times"
+        ) from last
+
     def merge(
         self,
         batch_df: DataFrame,
@@ -1582,17 +1597,11 @@ class SnapshotTable:
         commits whose every row is a tombstone. Retries the whole
         merge on a lost CAS, re-reading the winner's state (optimistic
         concurrency)."""
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._merge_once(
-                    batch_df, tombstone_filter, properties
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"merge lost the commit race {max_retries} times"
-        ) from last
+        return self._retry(
+            "merge",
+            lambda: self._merge_once(batch_df, tombstone_filter, properties),
+            max_retries,
+        )
 
     def append(
         self,
@@ -1642,15 +1651,11 @@ class SnapshotTable:
             raise ValueError(
                 f"append: batch is missing key/order columns {missing}"
             )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._append_once(batch_df, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"append lost the commit race {max_retries} times"
-        ) from last
+        return self._retry(
+            "append",
+            lambda: self._append_once(batch_df, properties),
+            max_retries,
+        )
 
     def _append_once(
         self, batch_df: DataFrame, properties: dict | None
@@ -1780,15 +1785,11 @@ class SnapshotTable:
                     f"compact: unknown buckets {unknown} "
                     f"(layout has {self.n_buckets})"
                 )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._compact_once(min_files, dedup_keys, buckets)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"compact lost the commit race {max_retries} times"
-        ) from last
+        return self._retry(
+            "compact",
+            lambda: self._compact_once(min_files, dedup_keys, buckets),
+            max_retries,
+        )
 
     def _compact_once(
         self,
@@ -1913,17 +1914,11 @@ class SnapshotTable:
         job). Quantile cuts come from the scoped rows — clustering
         quality only; pruning correctness always rests on exact
         footer stats."""
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._zorder_once(
-                    cols, rows_per_file, bits, buckets
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"rewrite_zorder lost the commit race {max_retries} times"
-        ) from last
+        return self._retry(
+            "rewrite_zorder",
+            lambda: self._zorder_once(cols, rows_per_file, bits, buckets),
+            max_retries,
+        )
 
     def _zorder_once(
         self,
@@ -2054,15 +2049,11 @@ class SnapshotTable:
         travel keeps pre-overwrite snapshots readable until
         ``expire_snapshots``; the same commit CAS applies. O(table)
         by design — this IS the full rewrite."""
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._overwrite_once(df, operation, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"overwrite lost the commit race {max_retries} times"
-        ) from last
+        return self._retry(
+            "overwrite",
+            lambda: self._overwrite_once(df, operation, properties),
+            max_retries,
+        )
 
     def _overwrite_once(
         self, df: DataFrame, operation: str, properties: dict | None
@@ -2193,32 +2184,90 @@ class SnapshotTable:
         commit: CAS retry on a lost race, time travel preserved
         (deleted rows remain readable at pre-delete snapshots until
         ``expire_snapshots``), and the predicate is recorded on the
-        manifest as the ``delete.predicate`` property for audit."""
+        manifest as the ``delete.predicate`` property for audit.
+
+        All three row-level DML verbs (this one, :meth:`update_where`
+        and :meth:`delete_keys`) share one pipeline per attempt,
+        :meth:`_dml_once`: ``touched = prune(...)`` — the predicate's
+        stats + bloom split, or the keys' layout hash — then one
+        candidate read marking each row's ``__hit``, then
+        ``effect = rewrite(touched) | dv(touched)`` — a copy-on-write
+        rewrite of the touched buckets, or a deletion-vector sidecar
+        of the hit positions — then ``commit(effect)`` under the
+        shared CAS retry (:meth:`_retry`)."""
         if mode not in ("cow", "mor"):
             raise ValueError(
                 f"delete_where: mode must be 'cow' or 'mor', got {mode!r}"
             )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                if mode == "mor":
-                    return self._delete_mor_once(predicate, properties)
-                return self._delete_once(predicate, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"delete_where lost the commit race {max_retries} times"
-        ) from last
+        audit = {"delete.predicate": predicate}
+        if mode == "mor":
+            audit["delete.mode"] = "mor"
+        return self._retry(
+            "delete_where",
+            lambda: self._dml_once(
+                properties, audit, mode == "mor", predicate=predicate
+            ),
+            max_retries,
+        )
 
-    def _delete_mor_once(
-        self, predicate: str, properties: dict | None
+    @staticmethod
+    def _buckets_of(df: DataFrame) -> list:
+        """Sorted distinct ``__bucket`` ids of ``df`` — ≤ n_buckets
+        ids collected, metadata, never data."""
+        return sorted(
+            r["__bucket"]
+            for r in df.select("__bucket").distinct().collect()
+        )
+
+    def _dml_once(
+        self,
+        properties: dict | None,
+        audit: dict,
+        mor: bool,
+        predicate: str | None = None,
+        keys_df: DataFrame | None = None,
+        assignments: dict[str, str] | None = None,
     ) -> int:
-        """Merge-on-read predicate DELETE: one O(matched rows)
-        sidecar write + one O(touched buckets) manifest delta — data
-        files untouched. The candidate scan rides the same stats +
-        bloom prune as the COW path, and reads DV-APPLIED, so a row
-        already deleted by an earlier vector can never be matched
-        twice (positions per file stay distinct by construction)."""
+        """One attempt of a row-level DML verb: ``delete_where`` (a
+        ``predicate``), ``update_where`` (a ``predicate`` and
+        ``assignments``) or ``delete_keys`` (a ``keys_df``), in
+        copy-on-write or merge-on-read (``mor``) form.
+
+        * **Prune.** A predicate splits files by footer stats and
+          blooms (:meth:`_split_candidates`); disjoint files carry by
+          reference. A keys frame is CAST to the table's key types
+          before hashing AND matching — Spark's hash is type-sensitive
+          (hash(7 as int) != hash(7 as long)), so an int-typed keys
+          frame against a long-keyed table would prune the wrong
+          buckets and SILENTLY DELETE NOTHING (the read_matching
+          alignment, review r11) — then deduped and persisted, since
+          it feeds both the bucket-target collect and the match join
+          (without the pin a nondeterministic lineage could hash one
+          version and join another). Only its buckets' files are
+          candidates.
+        * **Hit.** One read of the candidates marks each row's
+          ``__hit``: the predicate with NULL as FALSE (SQL DML
+          semantics — NULL rows survive), or a NULL-SAFE left join
+          against the keys. Merge-on-read keeps only the hits — the
+          predicate as a filter, the keys as a left-semi join — so
+          its plans carry no ``__hit`` column.
+        * **Effect.** Copy-on-write rewrites the touched buckets —
+          those holding an actual hit — with their survivors (delete)
+          or every row with the assignments applied to the hits
+          (update) through :meth:`_stage_rewrite`; candidate files of
+          untouched buckets and non-candidate files carry by
+          reference; :meth:`_commit_delta` commits. Merge-on-read
+          hands the hits' ``(__fname, __pos)`` to :meth:`_commit_dv`,
+          the updated rows riding along as ``extra_files``; data files
+          are never rewritten, and the DV-applied read means a row an
+          earlier vector deleted can never be matched twice.
+
+        The commit records the verb's ``audit`` properties (caller
+        properties win) and its read set — ``read.predicate``, or the
+        PROBED ``read.buckets`` (matched or not: the rebase overlap
+        check validates reads too, the write-skew guard) — so a lost
+        CAS can rebase (:meth:`_rebase_commit`). Nothing matched:
+        returns the base id, no empty commit."""
         from pyspark import StorageLevel
 
         base_id = self.current_id()
@@ -2226,37 +2275,159 @@ class SnapshotTable:
             raise ValueError(
                 f"snapshot table {self.table_dir}: no commits"
             )
+        if assignments is not None and not assignments:
+            raise ValueError(
+                "update_where: empty assignments (a no-op rewrite "
+                "would still burn I/O and a history entry)"
+            )
         base_raw = self._raw_meta(base_id)
         self._adopt_layout(base_raw)
+        schema = self._schema_of(base_raw)
+        if assignments:
+            frozen = (
+                set(self.key_cols) | {self.order_col} | set(self.bucket_cols)
+            )
+            bad = sorted(set(assignments) & frozen)
+            if bad:
+                raise ValueError(
+                    f"update_where: cannot assign key/order/bucket "
+                    f"columns {bad} (use merge with a new row instead)"
+                )
+            unknown = sorted(set(assignments) - set(schema.fieldNames()))
+            if unknown:
+                raise ValueError(
+                    f"update_where: unknown columns {unknown}"
+                )
+            # SQL UPDATE semantics: every SET expression evaluates
+            # against the PRE-update row — withColumns applies all
+            # assignments in ONE projection, so {'a': 'b', 'b': 'a'}
+            # is a swap, not dict-order-dependent (review r11).
+            sets = {
+                col: F.expr(expr).cast(schema[col].dataType)
+                for col, expr in assignments.items()
+            }
         base_bb = self._by_bucket(base_id)
-        cand, _kept = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id  # stats/bloom prove nothing matches
-        matched = (
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                self._schema_of(base_raw),
-                keep_meta=True,
-            )
-            # NULL predicate rows SURVIVE — SQL DELETE semantics
-            .filter(F.coalesce(F.expr(predicate), F.lit(False)))
-            .select("__fname", "__pos")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        props = dict(properties or {})
+        for k, v in audit.items():
+            props.setdefault(k, v)
+        operation = "update" if assignments else "delete"
+        pinned: list[DataFrame] = []
         try:
-            props = dict(properties or {})
-            props.setdefault("delete.predicate", predicate)
-            props.setdefault("delete.mode", "mor")
-            # the predicate IS the read set — see _rebase_commit
-            props["read.predicate"] = predicate
-            return self._commit_dv(
-                base_id, base_raw, base_bb, cand, matched, props,
-                rebase_ok=True,
+            if keys_df is None:
+                cand, kept = self._split_candidates(
+                    base_bb, predicate_bounds(predicate)
+                )
+                spark = self.spark
+                hit = F.coalesce(F.expr(predicate), F.lit(False))
+                read_set = {"read.predicate": predicate}
+            else:
+                keys = (
+                    keys_df.select(
+                        *[
+                            F.col(k).cast(schema[k].dataType).alias(k)
+                            for k in self.key_cols
+                        ]
+                    )
+                    .dropDuplicates(self.key_cols)
+                    .persist(StorageLevel.MEMORY_AND_DISK)
+                )
+                pinned.append(keys)
+                target = self._buckets_of(self._with_bucket(keys))
+                cand = {
+                    b: self._entries(base_bb[b])
+                    for b in target
+                    if self._loc_n(base_bb.get(b, []))
+                }
+                kept = {}
+                # the keys frame's own session — inside foreachBatch
+                # the micro-batch belongs to a cloned session and a
+                # join must not cross sessions (the _prepare_merge rule)
+                spark = keys_df.sparkSession
+                marked = keys.select(
+                    *[F.col(k).alias(f"__k_{k}") for k in self.key_cols]
+                )
+                on = self._null_safe_keys("__k_")
+                read_set = {"read.buckets": [int(b) for b in target]}
+            if not cand:
+                return base_id  # stats/bloom/layout prove no match
+            rows = self._read_entries(
+                [f for fs in cand.values() for f in fs],
+                schema, spark=spark, keep_meta=mor,
             )
+            if mor:
+                matched = (
+                    rows.filter(hit)
+                    if keys_df is None
+                    else rows.join(marked, on, "left_semi")
+                )
+                if not assignments:
+                    matched = matched.select("__fname", "__pos")
+                matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
+                pinned.append(matched)
+                new_files = None
+                if assignments:
+                    # updated rows keep their keys, so they land in
+                    # the buckets the dv flips already touch
+                    updated = self._with_bucket(
+                        matched.drop("__fname", "__pos")
+                    ).withColumns(sets)
+                    touched = self._buckets_of(updated)
+                    if not touched:
+                        return base_id
+                    new_files = self._stage_rewrite(updated, touched)
+                    matched = matched.select("__fname", "__pos")
+                props.update(read_set)
+                return self._commit_dv(
+                    base_id, base_raw, base_bb, cand, matched, props,
+                    extra_files=new_files, operation=operation,
+                    rebase_ok=True,
+                )
+            cur = self._with_bucket(rows)
+            if keys_df is None:
+                cur = cur.withColumn("__hit", hit)
+                miss = ~F.col("__hit")
+                drop = ["__hit"]
+            else:
+                cur = cur.join(
+                    marked.withColumn("__hit", F.lit(True)), on, "left"
+                )
+                miss = F.col("__hit").isNull()
+                drop = ["__hit", *[f"__k_{k}" for k in self.key_cols]]
+            cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
+            pinned.append(cur)
+            touched = self._buckets_of(cur.filter("__hit"))
+            if not touched:
+                return base_id  # candidates held no actual match
+            in_touched = F.col("__bucket").isin(touched)
+            if assignments:
+                out = cur.filter(in_touched).withColumns(
+                    {
+                        col: F.when(F.col("__hit"), e).otherwise(F.col(col))
+                        for col, e in sets.items()
+                    }
+                )
+            else:
+                out = cur.filter(in_touched & miss)
+            new_files = self._stage_rewrite(out.drop(*drop), touched)
         finally:
-            matched.unpersist()
+            for df in reversed(pinned):
+                df.unpersist()
+        # Touched buckets: non-candidate files carry by reference, the
+        # candidate files are replaced by the rewrite. Untouched
+        # candidate buckets keep their original lists.
+        touched_new: dict[int, list[dict]] = {
+            bkt: list(kept.get(bkt, [])) for bkt in touched
+        }
+        for f in new_files:
+            touched_new[f["bucket"]].append(f)
+        if keys_df is not None:
+            props.setdefault("delete.keys.buckets", len(touched))
+        props.update(read_set)
+        return self._commit_delta(
+            base_raw["schema"], base_bb, touched_new,
+            operation=operation, base_id=base_id, properties=props,
+            rebase_ok=True,
+        )
 
     def _commit_dv(
         self,
@@ -2286,10 +2457,11 @@ class SnapshotTable:
         manifest claim, so a crash in between leaves only an
         unreferenced orphan.
 
-        ``extra_files`` (the MOR-update path) are fresh staged
-        entries appended into their buckets IN THE SAME commit as the
-        dv flips — atomicity is the manifest claim, exactly as for
-        every other verb."""
+        ``extra_files`` (the updated rows of a merge-on-read
+        ``update_where`` or ``merge_into``) are fresh staged entries
+        appended into their buckets IN THE SAME commit as the dv
+        flips — atomicity is the manifest claim, exactly as for every
+        other verb."""
         import shutil
 
         counts = {
@@ -2388,66 +2560,6 @@ class SnapshotTable:
             rebase_ok=rebase_ok,
         )
 
-    def _delete_once(self, predicate: str, properties: dict | None) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        cand, kept_files = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id  # stats prove nothing matches — no-op
-        cur = self._with_bucket(
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                self._schema_of(base_raw), spark=self.spark,
-            )
-        ).withColumn(
-            # NULL predicate rows SURVIVE — SQL DELETE semantics
-            "__hit", F.coalesce(F.expr(predicate), F.lit(False))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            touched = sorted(
-                r["__bucket"]
-                for r in cur.filter("__hit")
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            if not touched:
-                return base_id  # candidates held no actual match
-            survivors = cur.filter(
-                F.col("__bucket").isin(touched) & ~F.col("__hit")
-            ).drop("__hit")
-            new_files = self._stage_rewrite(survivors, touched)
-        finally:
-            cur.unpersist()
-        # Touched buckets: stats-pruned files carry by reference, the
-        # candidate files are replaced by the survivor rewrite.
-        # Unmatched candidate buckets keep their original lists.
-        touched_new: dict[int, list[dict]] = {
-            bkt: list(kept_files.get(bkt, [])) for bkt in touched
-        }
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        props = dict(properties or {})
-        props.setdefault("delete.predicate", predicate)
-        # the predicate IS the read set — the rebase validates the
-        # winner's new files against its bounds (round 16)
-        props["read.predicate"] = predicate
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="delete", base_id=base_id, properties=props,
-            rebase_ok=True,
-        )
-
     def _split_candidates(
         self, base_bb: dict, bounds: dict
     ) -> "tuple[dict[int, list[dict]], dict[int, list[dict]]]":
@@ -2502,10 +2614,11 @@ class SnapshotTable:
         return cand, kept
 
     def _stage_rewrite(self, rows: DataFrame, touched: list) -> list:
-        """Staged COW write of the touched buckets' replacement rows
-        — the shared tail of delete_where/update_where/delete_keys
-        (one file per bucket, order-sorted for monotone row-group
-        stats, promoted to immutable names)."""
+        """Staged write of ``rows`` into the ``touched`` buckets —
+        one file per bucket, order-sorted for monotone row-group
+        stats, promoted to immutable names. :meth:`_dml_once` and
+        :meth:`merge_into` write their copy-on-write rewrites and
+        merge-on-read new rows through it."""
         run = uuid.uuid4().hex[:12]
         staging = os.path.join(self._data_dir, f".staging-{run}")
         (
@@ -2556,196 +2669,19 @@ class SnapshotTable:
             raise ValueError(
                 f"update_where: mode must be 'cow' or 'mor', got {mode!r}"
             )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                if mode == "mor":
-                    return self._update_mor_once(
-                        predicate, assignments, properties
-                    )
-                return self._update_once(predicate, assignments, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"update_where lost the commit race {max_retries} times"
-        ) from last
-
-    def _update_mor_once(
-        self,
-        predicate: str,
-        assignments: dict[str, str],
-        properties: dict | None,
-    ) -> int:
-        """Merge-on-read UPDATE: matched positions become deletion
-        vectors, the updated rows append as new files, both in ONE
-        commit (atomic — a reader sees pre-update or post-update,
-        never a dropped or doubled row). Updated rows keep their keys,
-        so they land in the buckets the dv flips already touch."""
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        if not assignments:
-            raise ValueError(
-                "update_where: empty assignments (a no-op rewrite "
-                "would still burn I/O and a history entry)"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        schema = self._schema_of(base_raw)
-        frozen = set(self.key_cols) | {self.order_col} | set(self.bucket_cols)
-        bad = sorted(set(assignments) & frozen)
-        if bad:
-            raise ValueError(
-                f"update_where: cannot assign key/order/bucket "
-                f"columns {bad} (use merge with a new row instead)"
-            )
-        unknown = sorted(set(assignments) - set(schema.fieldNames()))
-        if unknown:
-            raise ValueError(
-                f"update_where: unknown columns {unknown}"
-            )
-        base_bb = self._by_bucket(base_id)
-        cand, _kept = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id
-        matched = (
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                schema, keep_meta=True,
-            )
-            .filter(F.coalesce(F.expr(predicate), F.lit(False)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            updated = self._with_bucket(
-                matched.drop("__fname", "__pos")
-            ).withColumns(
-                {
-                    col: F.expr(expr).cast(schema[col].dataType)
-                    for col, expr in assignments.items()
-                }
-            )
-            touched = sorted(
-                r["__bucket"]
-                for r in updated.select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            if not touched:
-                return base_id
-            new_files = self._stage_rewrite(updated, touched)
-            props = dict(properties or {})
-            props.setdefault("update.predicate", predicate)
-            props.setdefault("update.columns", sorted(assignments))
-            props.setdefault("update.mode", "mor")
-            # the predicate IS the read set — see _rebase_commit
-            props["read.predicate"] = predicate
-            return self._commit_dv(
-                base_id, base_raw, base_bb, cand,
-                matched.select("__fname", "__pos"), props,
-                extra_files=new_files, operation="update",
-                rebase_ok=True,
-            )
-        finally:
-            matched.unpersist()
-
-    def _update_once(
-        self,
-        predicate: str,
-        assignments: dict[str, str],
-        properties: dict | None,
-    ) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        if not assignments:
-            raise ValueError(
-                "update_where: empty assignments (a no-op rewrite "
-                "would still burn I/O and a history entry)"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        schema = self._schema_of(base_raw)
-        frozen = set(self.key_cols) | {self.order_col} | set(self.bucket_cols)
-        bad = sorted(set(assignments) & frozen)
-        if bad:
-            raise ValueError(
-                f"update_where: cannot assign key/order/bucket "
-                f"columns {bad} (use merge with a new row instead)"
-            )
-        unknown = sorted(set(assignments) - set(schema.fieldNames()))
-        if unknown:
-            raise ValueError(
-                f"update_where: unknown columns {unknown}"
-            )
-        base_bb = self._by_bucket(base_id)
-        cand, kept_files = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id
-        cur = self._with_bucket(
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                schema, spark=self.spark,
-            )
-        ).withColumn(
-            "__hit", F.coalesce(F.expr(predicate), F.lit(False))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            touched = sorted(
-                r["__bucket"]
-                for r in cur.filter("__hit")
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            if not touched:
-                return base_id
-            # SQL UPDATE semantics: every SET expression evaluates
-            # against the PRE-update row — withColumns applies all
-            # assignments in ONE projection, so {'a': 'b', 'b': 'a'}
-            # is a swap, not dict-order-dependent (review r11).
-            rows = (
-                cur.filter(F.col("__bucket").isin(touched))
-                .withColumns(
-                    {
-                        col: F.when(
-                            F.col("__hit"),
-                            F.expr(expr).cast(schema[col].dataType),
-                        ).otherwise(F.col(col))
-                        for col, expr in assignments.items()
-                    }
-                )
-                .drop("__hit")
-            )
-            new_files = self._stage_rewrite(rows, touched)
-        finally:
-            cur.unpersist()
-        touched_new: dict[int, list[dict]] = {
-            bkt: list(kept_files.get(bkt, [])) for bkt in touched
+        audit = {
+            "update.predicate": predicate,
+            "update.columns": sorted(assignments),
         }
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        props = dict(properties or {})
-        props.setdefault("update.predicate", predicate)
-        props.setdefault("update.columns", sorted(assignments))
-        # the predicate IS the read set — see _rebase_commit
-        props["read.predicate"] = predicate
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="update", base_id=base_id, properties=props,
-            rebase_ok=True,
+        if mode == "mor":
+            audit["update.mode"] = "mor"
+        return self._retry(
+            "update_where",
+            lambda: self._dml_once(
+                properties, audit, mode == "mor",
+                predicate=predicate, assignments=assignments,
+            ),
+            max_retries,
         )
 
     def delete_keys(
@@ -2786,198 +2722,14 @@ class SnapshotTable:
             raise ValueError(
                 f"delete_keys: mode must be 'cow' or 'mor', got {mode!r}"
             )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                if mode == "mor":
-                    return self._delete_keys_mor_once(keys_df, properties)
-                return self._delete_keys_once(keys_df, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"delete_keys lost the commit race {max_retries} times"
-        ) from last
-
-    def _delete_keys_mor_once(
-        self, keys_df: DataFrame, properties: dict | None
-    ) -> int:
-        """Merge-on-read keyed delete: bucket-prune by the keys' own
-        layout hash (the :meth:`_delete_keys_once` prelude), then a
-        null-safe LEFT SEMI join marks matched positions and
-        :meth:`_commit_dv` writes them as one sidecar — O(matched
-        rows) written, zero data files rewritten."""
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        schema = self._schema_of(base_raw)
-        keys = (
-            keys_df.select(
-                *[
-                    F.col(k).cast(schema[k].dataType).alias(k)
-                    for k in self.key_cols
-                ]
-            )
-            .dropDuplicates(self.key_cols)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            target = sorted(
-                r["__bucket"]
-                for r in self._with_bucket(keys)
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            cand = {
-                b: self._entries(base_bb[b])
-                for b in target
-                if self._loc_n(base_bb.get(b, []))
-            }
-            if not cand:
-                return base_id
-            marked = keys.select(
-                *[F.col(k).alias(f"__k_{k}") for k in self.key_cols]
-            )
-            cond = None
-            for k in self.key_cols:
-                c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-                cond = c if cond is None else (cond & c)
-            matched = (
-                self._read_entries(
-                    [f for fs in cand.values() for f in fs],
-                    schema,
-                    spark=keys_df.sparkSession,
-                    keep_meta=True,
-                )
-                .join(marked, cond, "left_semi")
-                .select("__fname", "__pos")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                props = dict(properties or {})
-                props.setdefault("delete.mode", "mor")
-                # the PROBED bucket set (matched or not) — the rebase
-                # overlap check validates reads too (write-skew guard)
-                props["read.buckets"] = [int(b) for b in target]
-                return self._commit_dv(
-                    base_id, base_raw, base_bb, cand, matched, props,
-                    rebase_ok=True,  # keyed read set — bucket-contained
-                )
-            finally:
-                matched.unpersist()
-        finally:
-            keys.unpersist()
-
-    def _delete_keys_once(
-        self, keys_df: DataFrame, properties: dict | None
-    ) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        schema = self._schema_of(base_raw)
-        # CAST the keys to the TABLE's key types before hashing AND
-        # matching: Spark's hash is type-sensitive (hash(7 as int) !=
-        # hash(7 as long)), so an int-typed keys frame against a
-        # long-keyed table would prune the wrong buckets and SILENTLY
-        # DELETE NOTHING — the same alignment read_matching applies
-        # (review r11). Persisted: the deduped deletion set feeds the
-        # bucket-target collect AND the match join; without the pin a
-        # nondeterministic keys lineage could hash one version and
-        # join another.
-        from pyspark import StorageLevel as _SL
-
-        keys = (
-            keys_df.select(
-                *[
-                    F.col(k).cast(schema[k].dataType).alias(k)
-                    for k in self.key_cols
-                ]
-            )
-            .dropDuplicates(self.key_cols)
-            .persist(_SL.MEMORY_AND_DISK)
-        )
-        try:
-            target = sorted(
-                r["__bucket"]
-                for r in self._with_bucket(keys)
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            cand = {
-                b: self._entries(base_bb[b])
-                for b in target
-                if self._loc_n(base_bb.get(b, []))
-            }
-            if not cand:
-                return base_id
-            marked = keys.select(
-                *[F.col(k).alias(f"__k_{k}") for k in self.key_cols]
-            ).withColumn("__hit", F.lit(True))
-            cond = None
-            for k in self.key_cols:
-                c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-                cond = c if cond is None else (cond & c)
-            cur = (
-                self._with_bucket(
-                    self._read_entries(
-                        [f for fs in cand.values() for f in fs],
-                        schema,
-                        # the keys frame's own session — inside
-                        # foreachBatch the micro-batch belongs to a
-                        # cloned session and a join must not cross
-                        # sessions (the _prepare_merge rule)
-                        spark=keys_df.sparkSession,
-                    )
-                )
-                .join(marked, cond, "left")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                touched = sorted(
-                    r["__bucket"]
-                    for r in cur.filter("__hit")
-                    .select("__bucket")
-                    .distinct()
-                    .collect()
-                )
-                if not touched:
-                    return base_id
-                survivors = cur.filter(
-                    F.col("__bucket").isin(touched)
-                    & F.col("__hit").isNull()
-                ).drop("__hit", *[f"__k_{k}" for k in self.key_cols])
-                new_files = self._stage_rewrite(survivors, touched)
-            finally:
-                cur.unpersist()
-        finally:
-            keys.unpersist()
-        touched_new: dict[int, list[dict]] = {bkt: [] for bkt in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        props = dict(properties or {})
-        props.setdefault("delete.keys.buckets", len(touched))
-        # the PROBED bucket set (matched or not) — the rebase overlap
-        # check validates reads too (write-skew guard)
-        props["read.buckets"] = [int(b) for b in target]
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="delete", base_id=base_id, properties=props,
-            rebase_ok=True,
+        return self._retry(
+            "delete_keys",
+            lambda: self._dml_once(
+                properties,
+                {"delete.mode": "mor"} if mode == "mor" else {},
+                mode == "mor", keys_df=keys_df,
+            ),
+            max_retries,
         )
 
     def merge_into(
@@ -3039,18 +2791,14 @@ class SnapshotTable:
                 f"merge_into: when_not_matched={when_not_matched!r} "
                 "not in ('insert', 'ignore')"
             )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._merge_into_once(
-                    source, when_matched, matched_condition,
-                    when_not_matched, properties, mor=(mode == "mor"),
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"merge_into lost the commit race {max_retries} times"
-        ) from last
+        return self._retry(
+            "merge_into",
+            lambda: self._merge_into_once(
+                source, when_matched, matched_condition,
+                when_not_matched, properties, mor=(mode == "mor"),
+            ),
+            max_retries,
+        )
 
     def _merge_into_once(
         self,
@@ -3103,13 +2851,7 @@ class SnapshotTable:
                     "MERGE requires at most one source row per "
                     "target key"
                 )
-            target = sorted(
-                r["__bucket"]
-                for r in self._with_bucket(src)
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
+            target = self._buckets_of(self._with_bucket(src))
             cand = {
                 b: self._entries(base_bb[b])
                 for b in target
@@ -3166,13 +2908,9 @@ class SnapshotTable:
                     # alone must not force a bucket rewrite
                     act_buckets: set = set()
                 else:
-                    act_buckets = {
-                        r["__bucket"]
-                        for r in joined.filter("__act")
-                        .select("__bucket")
-                        .distinct()
-                        .collect()
-                    }
+                    act_buckets = set(
+                        self._buckets_of(joined.filter("__act"))
+                    )
                 if when_not_matched == "insert":
                     inserts = src.join(
                         joined.select(
@@ -3184,13 +2922,9 @@ class SnapshotTable:
                         self._null_safe_keys("__b_"),
                         "left_anti",
                     ).persist(StorageLevel.MEMORY_AND_DISK)
-                    ins_buckets = {
-                        r["__bucket"]
-                        for r in self._with_bucket(inserts)
-                        .select("__bucket")
-                        .distinct()
-                        .collect()
-                    }
+                    ins_buckets = set(
+                        self._buckets_of(self._with_bucket(inserts))
+                    )
                 else:
                     inserts = None
                     ins_buckets = set()
@@ -3393,9 +3127,7 @@ class SnapshotTable:
         properties,
     ):
         base_schema_json = base_raw["schema"] if base_raw else None
-        touched = sorted(
-            r["__bucket"] for r in b.select("__bucket").distinct().collect()
-        )
+        touched = self._buckets_of(b)
         replaced = [
             f
             for bkt in touched
@@ -4785,8 +4517,7 @@ class SnapshotTable:
         exact)."""
         if new_n_buckets < 1:
             raise ValueError("rebucket: need at least one bucket")
-        last: Exception | None = None
-        for _ in range(max_retries):
+        def once() -> int:
             base_id = self.current_id()
             if base_id is None:
                 raise ValueError(
@@ -4811,16 +4542,12 @@ class SnapshotTable:
                 .parquet(staging)
             )
             new_files = self._promote_staged(staging, run)
-            try:
-                return self._commit(
-                    cur.schema.json(), [], new_files,
-                    operation="rebucket", base_id=base_id,
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"rebucket lost the commit race {max_retries} times"
-        ) from last
+            return self._commit(
+                cur.schema.json(), [], new_files,
+                operation="rebucket", base_id=base_id,
+            )
+
+        return self._retry("rebucket", once, max_retries)
 
     # ------------------------------------------------------------ maintain
 
@@ -4848,8 +4575,7 @@ class SnapshotTable:
         ``self.bucket_cols`` / ``self.bloom_cols`` /
         ``self._retired`` (always derived from ``base_raw``, never
         from handle state — retry-safe)."""
-        last: Exception | None = None
-        for _ in range(max_retries):
+        def once() -> int:
             base_id = self.current_id()
             if base_id is None:
                 raise ValueError(
@@ -4863,18 +4589,13 @@ class SnapshotTable:
                 # tracking (ids in declaration order) in this commit
                 schema_json = self._stamp_fids_json(schema_json)
             st = T.StructType.fromJson(json.loads(schema_json))
-            new_schema = fn(st, base_raw)
-            try:
-                return self._commit_delta(
-                    new_schema.json(), self._by_bucket(base_id), {},
-                    operation="evolve", base_id=base_id,
-                    properties={"evolve.op": label},
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"{label}: lost the commit race {max_retries} times"
-        ) from last
+            return self._commit_delta(
+                fn(st, base_raw).json(), self._by_bucket(base_id), {},
+                operation="evolve", base_id=base_id,
+                properties={"evolve.op": label},
+            )
+
+        return self._retry(f"{label}:", once, max_retries)
 
     def rename_column(
         self, old: str, new: str, max_retries: int = 5
