@@ -2,7 +2,8 @@
 items 4+5): the grouped two-table commit vs sequential per-table
 commits, and delete_where's stats prune vs an unprunable predicate.
 
-Like scripts/bench_manifest_depth.py, the commit-protocol half is
+Like scripts/bench_manifest_depth.py (historical: deleted after
+commit 31617ee), the commit-protocol half is
 pure-Python metadata (stdlib JSON + os.link — Spark never touches it),
 so those numbers are exact; the delete half runs real Spark jobs and
 reports the FILE COUNTS the prune opened (the scale-relevant quantity)

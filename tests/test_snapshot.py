@@ -180,17 +180,19 @@ def test_concurrent_writers_cas_retry(spark, tdir, monkeypatch):
 
 
 def test_commit_conflict_surfaces_on_stale_base(spark, tdir):
-    """_commit against a stale base must raise CommitConflict (never
-    silently drop the winner's files)."""
+    """A commit claimed against a stale base must raise
+    CommitConflict (never silently drop the winner's files)."""
     from turnover_odata_etl_spark.storage.snapshot import CommitConflict
 
     t = make_table(spark, tdir)
     t.merge(batch(spark, [(1, "a", 1)]))
     t.merge(batch(spark, [(1, "A", 2)]))
     with pytest.raises(CommitConflict):
-        t._commit(
-            batch(spark, [(9, "z", 9)]).schema.json(),
-            [], [], "merge", base_id=1,
+        t._claim_or_rebase(
+            t._build_delta(
+                batch(spark, [(9, "z", 9)]).schema.json(),
+                t._by_bucket(1), {}, "merge", base_id=1,
+            )
         )
 
 

@@ -517,8 +517,7 @@ class SnapshotGroup:
                 prepared.items()
             ):
                 t._prime_meta(new_id, manifest)
-                if merged_bb is not None:
-                    t._prime_bb(new_id, merged_bb)
+                t._prime_bb(new_id, merged_bb)
                 out[name] = new_id
             return out
         raise RuntimeError(

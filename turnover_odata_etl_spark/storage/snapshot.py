@@ -312,7 +312,7 @@ FULL_MANIFEST_EVERY = 16
 # json) and referenced from the manifest as {"seg": name, "n": count}
 # — so a FULL ANCHOR carries untouched big buckets as O(1) references
 # instead of re-serializing their lists (the last O(F) write on the
-# commit path; see _commit_delta). Small lists stay inline: tiny
+# commit path; see _build_delta). Small lists stay inline: tiny
 # tables produce v2-identical manifests and pay zero extra file I/O.
 SEG_INLINE_MAX = 32
 
@@ -749,8 +749,8 @@ class SnapshotTable:
         (O(n_buckets)) and replaces only the delta's buckets — the
         untouched buckets' file LISTS are carried by reference, never
         copied or iterated. This is what makes the merge hot path flat
-        in table size (VERDICT r09 item 5): ``_merge_once`` + the
-        delta ``_commit`` consult only this view for the touched
+        in table size (VERDICT r09 item 5): ``_prepare_merge`` and
+        ``_build_delta`` consult only this view for the touched
         buckets, so a micro-batch commit on a 10⁶-file table walks
         O(n_buckets + touched files) entries, not O(F). The flat
         ``_manifest(...)["files"]`` view (which IS O(F) to build)
@@ -902,6 +902,23 @@ class SnapshotTable:
                 changed = True
             fields.append(f)
         return T.StructType(fields).json() if changed else schema_json
+
+    def _rewrite_schema(self, schema_json: str, base_raw: dict) -> str:
+        """Schema of a WHOLE-TABLE rewrite (overwrite, rebucket) of a
+        fid-tracked table: fid-less fields inherit the base field id
+        by name, and the name machinery is RECLAIMED — no pre-rewrite
+        file survives, so prior-name lineages and the retired
+        registry would only contradict the post-rewrite schema
+        (review r16: a stale retired entry next to a re-created live
+        column of the same name). A genuinely new name is stamped
+        fresh by :meth:`_build_delta`'s guard. Tables without fid
+        tracking pass through untouched."""
+        if not self._last_fid:
+            return schema_json
+        self._retired = {}
+        return self._strip_priors_json(
+            self._inherit_fids_json(schema_json, base_raw["schema"])
+        )
 
     def _guarded_append_schema(self, schema_json: str) -> str:
         """Commit-time hook for fid-tracked tables: any fid-less
@@ -1599,7 +1616,10 @@ class SnapshotTable:
         concurrency)."""
         return self._retry(
             "merge",
-            lambda: self._merge_once(batch_df, tombstone_filter, properties),
+            lambda: self._claim_or_rebase(
+                self._prepare_merge(batch_df, tombstone_filter, properties),
+                rebase_ok=True,
+            ),
             max_retries,
         )
 
@@ -1653,31 +1673,26 @@ class SnapshotTable:
             )
         return self._retry(
             "append",
-            lambda: self._append_once(batch_df, properties),
+            lambda: self._claim_or_rebase(
+                self._prepare_append(batch_df, properties), rebase_ok=True
+            ),
             max_retries,
         )
 
-    def _append_once(
-        self, batch_df: DataFrame, properties: dict | None
-    ) -> int:
-        prep = self._prepare_append(batch_df, properties)
-        if isinstance(prep, int):
-            return prep  # no-op: empty batch on an existing snapshot
-        return self._claim_or_rebase(prep)
-
     def _prepare_append(
         self, batch_df: DataFrame, properties: dict | None
-    ) -> "tuple[dict, int, dict | None] | int":
+    ) -> "tuple[dict, int, dict] | int":
         """Everything APPEND does up to — not including — the commit
         claim: staged write, file promotion, manifest construction.
         Returns the plain base id for the no-op case, else
-        ``(manifest, new_id, merged_bb-or-None)`` for the caller to
-        claim — directly (:meth:`_append_once`) or as one member of a
+        ``(manifest, new_id, merged_bb)`` for the caller to claim —
+        through :meth:`_claim_or_rebase`, or as one member of a
         grouped transaction (:class:`SnapshotGroup`). Staged data
         files are durable under ``data/`` when this returns; until a
         claim lands they are unreferenced orphans, exactly the
         existing crash-before-claim contract."""
         base_id = self.current_id()
+        base_bb: dict = {}
         if base_id:
             base_raw = self._raw_meta(base_id)
             self._adopt_layout(base_raw)
@@ -1693,49 +1708,17 @@ class SnapshotTable:
                 .schema.json()
             )
         else:
-            base_bb = {}
             evolved_json = batch_df.schema.json()
-
-        run = uuid.uuid4().hex[:12]
-        staging = os.path.join(self._data_dir, f".staging-{run}")
-        (
-            # Same physical discipline as MERGE's staged write: one
-            # file per bucket, rows sorted on the order column so
-            # row-group stats stay monotone for read_range/read_where.
-            self._with_bucket(batch_df)
-            .repartition(self.n_buckets, "__bucket")
-            .sortWithinPartitions("__bucket", self.order_col)
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(staging)
+        new_files = self._stage_rewrite(
+            self._with_bucket(batch_df), self.n_buckets, self.order_col
         )
-        new_files = self._promote_staged(staging, run)
-        if not new_files:
-            # Empty batch: identical contract to MERGE's empty path.
-            if base_id is not None and not properties:
-                return base_id
-            if base_id is None:
-                m, nid = self._build_commit(
-                    evolved_json, [], [], operation="append",
-                    base_id=None, properties=properties,
-                )
-                return m, nid, None
-            return self._build_delta(
-                evolved_json, base_bb, {}, operation="append",
-                base_id=base_id, properties=properties,
-            )
+        if not new_files and base_id is not None and not properties:
+            return base_id  # empty batch: same contract as MERGE's
         # A touched bucket's new list = parent's list + the appended
         # files; untouched buckets carry by reference through base_bb.
-        touched_new: dict[int, list[dict]] = {}
-        for f in new_files:
-            if f["bucket"] not in touched_new:
-                touched_new[f["bucket"]] = list(
-                    self._entries(base_bb.get(f["bucket"], []))
-                )
-            touched_new[f["bucket"]].append(f)
         return self._build_delta(
-            evolved_json, base_bb, touched_new, operation="append",
-            base_id=base_id, properties=properties,
+            evolved_json, base_bb, {}, operation="append",
+            base_id=base_id, properties=properties, new_files=new_files,
         )
 
     def compact(
@@ -1846,23 +1829,15 @@ class SnapshotTable:
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
             )
-        run = uuid.uuid4().hex[:12]
-        staging = os.path.join(self._data_dir, f".staging-{run}")
-        (
-            self._with_bucket(cur)
-            .repartition(len(touched), "__bucket")
-            .sortWithinPartitions("__bucket", self.order_col)
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(staging)
+        new_files = self._stage_rewrite(
+            self._with_bucket(cur), len(touched), self.order_col
         )
-        new_files = self._promote_staged(staging, run)
-        touched_new: dict[int, list[dict]] = {bkt: [] for bkt in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="compact", base_id=base_id, rebase_ok=True,
+        return self._claim_or_rebase(
+            self._build_delta(
+                base_raw["schema"], base_bb, {b: [] for b in touched},
+                operation="compact", base_id=base_id, new_files=new_files,
+            ),
+            rebase_ok=True,
         )
 
     def rewrite_zorder(
@@ -2006,28 +1981,17 @@ class SnapshotTable:
         z = morton_code(
             [F.col(f"__qs.q{i}") for i in range(len(qs))], bits
         )
-        run = uuid.uuid4().hex[:12]
-        staging = os.path.join(self._data_dir, f".staging-{run}")
-        (
-            self._with_bucket(cur)
-            .select("*", q_struct)
-            .withColumn("__z", z)
-            .repartition(len(touched), "__bucket")
-            .sortWithinPartitions("__bucket", "__z")
-            .drop("__z", "__qs")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", int(rows_per_file))
-            .partitionBy("__bucket")
-            .parquet(staging)
+        new_files = self._stage_rewrite(
+            self._with_bucket(cur).select("*", q_struct).withColumn("__z", z),
+            len(touched), "__z", int(rows_per_file), scratch=("__z", "__qs"),
         )
-        new_files = self._promote_staged(staging, run)
-        touched_new: dict[int, list[dict]] = {bkt: [] for bkt in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="zorder", base_id=base_id,
-            properties={"zorder.cols": ",".join(cols)},
+        return self._claim_or_rebase(
+            self._build_delta(
+                base_raw["schema"], base_bb, {b: [] for b in touched},
+                operation="zorder", base_id=base_id,
+                properties={"zorder.cols": ",".join(cols)},
+                new_files=new_files,
+            )
         )
 
     def overwrite(
@@ -2051,19 +2015,11 @@ class SnapshotTable:
         by design — this IS the full rewrite."""
         return self._retry(
             "overwrite",
-            lambda: self._overwrite_once(df, operation, properties),
+            lambda: self._claim_or_rebase(
+                self._prepare_overwrite(df, operation, properties)
+            ),
             max_retries,
         )
-
-    def _overwrite_once(
-        self, df: DataFrame, operation: str, properties: dict | None
-    ) -> int:
-        manifest, new_id, merged_bb = self._prepare_overwrite(
-            df, operation, properties
-        )
-        sid = self._claim(manifest, new_id)
-        self._prime_bb(sid, merged_bb)
-        return sid
 
     def _prepare_overwrite(
         self,
@@ -2072,8 +2028,8 @@ class SnapshotTable:
         properties: dict | None = None,
     ) -> "tuple[dict, int, dict]":
         """Everything OVERWRITE does up to — not including — the
-        commit claim (the :meth:`_prepare_append` contract); used by
-        :meth:`_overwrite_once` and as one member of a mixed-verb
+        commit claim (the :meth:`_prepare_append` contract); claimed
+        by :meth:`overwrite`, or as one member of a mixed-verb
         grouped transaction (:meth:`SnapshotGroup.apply_all` — e.g.
         an IVF posting rebalance committed in the same instant as its
         re-trained codebook). Never a no-op: overwriting with an
@@ -2104,33 +2060,13 @@ class SnapshotTable:
         # every existing bucket must be touched (its old files drop)
         # and every layout bucket may receive new rows
         touched = sorted(set(base_bb) | set(range(self.n_buckets)))
-        run = uuid.uuid4().hex[:12]
-        staging = os.path.join(self._data_dir, f".staging-{run}")
-        (
-            self._with_bucket(aligned)
-            .repartition(self.n_buckets, "__bucket")
-            .sortWithinPartitions("__bucket", self.order_col)
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(staging)
+        new_files = self._stage_rewrite(
+            self._with_bucket(aligned), self.n_buckets, self.order_col
         )
-        new_files = self._promote_staged(staging, run)
-        touched_new: dict[int, list[dict]] = {b: [] for b in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        schema_json = base_raw["schema"]
-        if self._last_fid:
-            # whole-table rewrite: no pre-rewrite file survives, so
-            # prior-name lineages and the retired registry are
-            # RECLAIMED with the rewrite (review r16 — the
-            # _build_commit rule; overwrite commits through the
-            # delta builder, so it applies here too)
-            schema_json = self._strip_priors_json(schema_json)
-            self._retired = {}
         return self._build_delta(
-            schema_json, base_bb, touched_new,
-            operation=operation, base_id=base_id,
-            properties=properties,
+            self._rewrite_schema(base_raw["schema"], base_raw), base_bb,
+            {b: [] for b in touched}, operation=operation, base_id=base_id,
+            properties=properties, new_files=new_files,
         )
 
     def delete_where(
@@ -2256,7 +2192,7 @@ class SnapshotTable:
           or every row with the assignments applied to the hits
           (update) through :meth:`_stage_rewrite`; candidate files of
           untouched buckets and non-candidate files carry by
-          reference; :meth:`_commit_delta` commits. Merge-on-read
+          reference. Merge-on-read
           hands the hits' ``(__fname, __pos)`` to :meth:`_commit_dv`,
           the updated rows riding along as ``extra_files``; data files
           are never rewritten, and the DV-applied read means a row an
@@ -2266,8 +2202,10 @@ class SnapshotTable:
         properties win) and its read set — ``read.predicate``, or the
         PROBED ``read.buckets`` (matched or not: the rebase overlap
         check validates reads too, the write-skew guard) — so a lost
-        CAS can rebase (:meth:`_rebase_commit`). Nothing matched:
-        returns the base id, no empty commit."""
+        CAS can rebase (:meth:`_rebase_commit`); both effects build
+        their manifest with :meth:`_build_delta` and claim it through
+        :meth:`_claim_or_rebase`. Nothing matched: returns the base id,
+        no empty commit."""
         from pyspark import StorageLevel
 
         base_id = self.current_id()
@@ -2374,13 +2312,14 @@ class SnapshotTable:
                     touched = self._buckets_of(updated)
                     if not touched:
                         return base_id
-                    new_files = self._stage_rewrite(updated, touched)
+                    new_files = self._stage_rewrite(
+                        updated, len(touched), self.order_col
+                    )
                     matched = matched.select("__fname", "__pos")
                 props.update(read_set)
                 return self._commit_dv(
                     base_id, base_raw, base_bb, cand, matched, props,
                     extra_files=new_files, operation=operation,
-                    rebase_ok=True,
                 )
             cur = self._with_bucket(rows)
             if keys_df is None:
@@ -2408,24 +2347,25 @@ class SnapshotTable:
                 )
             else:
                 out = cur.filter(in_touched & miss)
-            new_files = self._stage_rewrite(out.drop(*drop), touched)
+            new_files = self._stage_rewrite(
+                out.drop(*drop), len(touched), self.order_col
+            )
         finally:
             for df in reversed(pinned):
                 df.unpersist()
-        # Touched buckets: non-candidate files carry by reference, the
-        # candidate files are replaced by the rewrite. Untouched
-        # candidate buckets keep their original lists.
-        touched_new: dict[int, list[dict]] = {
-            bkt: list(kept.get(bkt, [])) for bkt in touched
-        }
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
         if keys_df is not None:
             props.setdefault("delete.keys.buckets", len(touched))
         props.update(read_set)
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation=operation, base_id=base_id, properties=props,
+        # Touched buckets: non-candidate files carry by reference, the
+        # candidate files are replaced by the rewrite. Untouched
+        # candidate buckets keep their original lists.
+        return self._claim_or_rebase(
+            self._build_delta(
+                base_raw["schema"], base_bb,
+                {b: list(kept.get(b, [])) for b in touched},
+                operation=operation, base_id=base_id, properties=props,
+                new_files=new_files,
+            ),
             rebase_ok=True,
         )
 
@@ -2439,7 +2379,6 @@ class SnapshotTable:
         props: dict,
         extra_files: list | None = None,
         operation: str = "delete",
-        rebase_ok: bool = False,
     ) -> int:
         """Shared deletion-vector commit tail (round 14): given the
         matched ``(__fname, __pos)`` frame, write ONE position
@@ -2461,7 +2400,9 @@ class SnapshotTable:
         ``update_where`` or ``merge_into``) are fresh staged entries
         appended into their buckets IN THE SAME commit as the dv
         flips — atomicity is the manifest claim, exactly as for every
-        other verb."""
+        other verb. Both callers (the row-level DML verbs and
+        :meth:`merge_into`) record their read set, so a lost claim may
+        rebase."""
         import shutil
 
         counts = {
@@ -2552,12 +2493,13 @@ class SnapshotTable:
                 }
                 lst.append(g)
             touched_new[bkt] = lst
-        for f in extra_files or ():
-            touched_new[f["bucket"]].append(f)
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation=operation, base_id=base_id, properties=props,
-            rebase_ok=rebase_ok,
+        return self._claim_or_rebase(
+            self._build_delta(
+                base_raw["schema"], base_bb, touched_new,
+                operation=operation, base_id=base_id, properties=props,
+                new_files=extra_files or (),
+            ),
+            rebase_ok=True,
         )
 
     def _split_candidates(
@@ -2613,21 +2555,44 @@ class SnapshotTable:
                 side.setdefault(bkt, []).append(f)
         return cand, kept
 
-    def _stage_rewrite(self, rows: DataFrame, touched: list) -> list:
-        """Staged write of ``rows`` into the ``touched`` buckets —
-        one file per bucket, order-sorted for monotone row-group
-        stats, promoted to immutable names. :meth:`_dml_once` and
-        :meth:`merge_into` write their copy-on-write rewrites and
-        merge-on-read new rows through it."""
+    def _stage_rewrite(
+        self,
+        rows: DataFrame,
+        parts: int,
+        sort: str | None,
+        max_records: int | None = None,
+        scratch: tuple = (),
+    ) -> list:
+        """The one staged data write every committing verb runs:
+        ``rows`` (carrying ``__bucket``) hash-repartitioned into
+        ``parts`` tasks, written one directory per bucket under a
+        unique ``.staging-<run>`` name (never visible to readers until
+        the manifest claim) and promoted to immutable names; returns
+        the new files' manifest entries.
+
+        Within each file rows sort on ``sort`` — the order column for
+        every verb but two, which keeps parquet ROW-GROUP statistics
+        monotone so a pushed-down range predicate (read_range,
+        read_where) skips row groups inside the files the
+        manifest-level prune could not exclude; z-order sorts on its
+        Morton code and rebucket (``None``) does not sort.
+        ``max_records`` caps rows per file (z-order's
+        ``rows_per_file`` split) and ``scratch`` names the columns
+        only the sort needs (z-order's ``__z`` key and its ``__qs``
+        quantized struct), dropped after it — named by the caller, as
+        any ``__``-prefixed name rule would also drop a table's own
+        ``__``-prefixed columns."""
         run = uuid.uuid4().hex[:12]
         staging = os.path.join(self._data_dir, f".staging-{run}")
-        (
-            rows.repartition(len(touched), "__bucket")
-            .sortWithinPartitions("__bucket", self.order_col)
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(staging)
-        )
+        out = rows.repartition(parts, "__bucket")
+        if sort is not None:
+            out = out.sortWithinPartitions("__bucket", sort)
+        if scratch:
+            out = out.drop(*scratch)
+        w = out.write.mode("overwrite")
+        if max_records is not None:
+            w = w.option("maxRecordsPerFile", max_records)
+        w.partitionBy("__bucket").parquet(staging)
         return self._promote_staged(staging, run)
 
     def update_where(
@@ -2960,7 +2925,9 @@ class SnapshotTable:
                         | ins_buckets
                     )
                     new_files = (
-                        self._stage_rewrite(to_stage, stage_buckets)
+                        self._stage_rewrite(
+                            to_stage, len(stage_buckets), self.order_col
+                        )
                         if to_stage is not None and stage_buckets
                         else []
                     )
@@ -2992,7 +2959,7 @@ class SnapshotTable:
                     return self._commit_dv(
                         base_id, base_raw, base_bb, cand, positions,
                         props, extra_files=new_files,
-                        operation="merge_into", rebase_ok=True,
+                        operation="merge_into",
                     )
                 if when_matched == "update":
                     kept = joined.select(
@@ -3019,16 +2986,15 @@ class SnapshotTable:
                             F.col("__bucket").isin(touched)
                         )
                     )
-                new_files = self._stage_rewrite(rows, touched)
+                new_files = self._stage_rewrite(
+                    rows, len(touched), self.order_col
+                )
             finally:
                 joined.unpersist()
                 if inserts is not None:
                     inserts.unpersist()
         finally:
             src.unpersist()
-        touched_new: dict[int, list[dict]] = {bkt: [] for bkt in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
         props = dict(properties or {})
         props.setdefault("merge_into.when_matched", when_matched)
         props.setdefault("merge_into.when_not_matched", when_not_matched)
@@ -3039,9 +3005,12 @@ class SnapshotTable:
         # every source key's bucket, matched or not — the rebase
         # overlap check validates reads too (write-skew guard)
         props["read.buckets"] = [int(b) for b in target]
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="merge_into", base_id=base_id, properties=props,
+        return self._claim_or_rebase(
+            self._build_delta(
+                base_raw["schema"], base_bb, {b: [] for b in touched},
+                operation="merge_into", base_id=base_id, properties=props,
+                new_files=new_files,
+            ),
             rebase_ok=True,
         )
 
@@ -3053,28 +3022,20 @@ class SnapshotTable:
             cond = c if cond is None else (cond & c)
         return cond
 
-    def _merge_once(
-        self,
-        batch_df: DataFrame,
-        tombstone_filter: str | None,
-        properties: dict | None = None,
-    ) -> int:
-        prep = self._prepare_merge(batch_df, tombstone_filter, properties)
-        if isinstance(prep, int):
-            return prep  # no-op: empty batch on an existing snapshot
-        return self._claim_or_rebase(prep)
-
     def _prepare_merge(
         self,
         batch_df: DataFrame,
         tombstone_filter: str | None,
         properties: dict | None = None,
-    ) -> "tuple[dict, int, dict | None] | int":
+    ) -> "tuple[dict, int, dict] | int":
         """Everything MERGE does up to — not including — the commit
-        claim (see :meth:`_prepare_append` for the contract); used
-        directly by :meth:`_merge_once` and as one member of a
-        grouped transaction (:meth:`SnapshotGroup.merge_all`)."""
+        claim (see :meth:`_prepare_append` for the contract); claimed
+        by :meth:`merge`, or as one member of a grouped transaction
+        (:meth:`SnapshotGroup.merge_all`)."""
+        from pyspark import StorageLevel
+
         base_id = self.current_id()
+        base_bb: dict = {}
         if base_id:
             # Config + schema come from the RAW manifest (O(1) read)
             # and file lists from the structurally-shared per-bucket
@@ -3087,8 +3048,6 @@ class SnapshotTable:
             base_raw = self._raw_meta(base_id)
             self._adopt_layout(base_raw)
             base_bb = self._by_bucket(base_id)
-        else:
-            base_bb = {}
         # validated AFTER adoption (round 16 review: post-rename key/
         # order names are the ones a batch must carry)
         missing = [
@@ -3108,137 +3067,100 @@ class SnapshotTable:
         # so without the pin the batch is computed twice per merge.
         # Released in the finally below; O(batch) memory-and-disk,
         # exactly the bytes the merge already moves.
-        from pyspark import StorageLevel
-
         b = self._with_bucket(batch_df).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
-            return self._prepare_merge_pinned(
-                b, base_id, base_bb,
-                base_raw if base_id else None,
-                tombstone_filter, properties,
+            touched = self._buckets_of(b)
+            if not touched:
+                # Empty batch: leave history clean (the caller's run
+                # is still checkpoint-tracked); first-ever commit
+                # records an empty snapshot so the table becomes
+                # readable. If the caller asked to stamp PROPERTIES,
+                # an existing table gets a metadata-only commit (all
+                # base files carried by reference, an O(1)-manifest
+                # delta with zero bucket entries) instead of a silent
+                # return — otherwise an IVM view's `reflects_base`
+                # watermark would lag on no-op batches and every later
+                # fold would walk changes() across a growing span,
+                # breaking latest_property's documented "stamped on
+                # every commit reads ONE manifest" fast path
+                # (ADVICE r08).
+                if base_id is not None and not properties:
+                    return base_id
+                return self._build_delta(
+                    base_raw["schema"]
+                    if base_id
+                    else b.drop("__bucket").schema.json(),
+                    base_bb, {}, operation="merge", base_id=base_id,
+                    properties=properties,
+                )
+            replaced = [
+                f
+                for bkt in touched
+                for f in self._entries(base_bb.get(bkt, []))
+            ]
+            if replaced:
+                # Use the batch's own session (inside foreachBatch the
+                # micro-batch frame belongs to a cloned session; a
+                # union must not cross sessions). Aligned to the BASE
+                # schema so files predating an earlier evolution read
+                # consistently.
+                cur = self._read_entries(
+                    replaced,
+                    self._schema_of(base_raw),
+                    spark=b.sparkSession,
+                )
+                # allowMissingColumns = ADDITIVE schema evolution: a
+                # batch with a new column widens the table (old rows
+                # read NULL); a batch from an old writer gets NULLs
+                # for newer columns. Same-name type conflicts fail
+                # loudly inside unionByName.
+                merged = self._with_bucket(cur).unionByName(
+                    b, allowMissingColumns=True
+                )
+            elif base_id:
+                # No touched bucket has existing files, but the table
+                # has a schema history: union against an EMPTY frame
+                # in the base manifest's schema so the recorded schema
+                # is always base ∪ batch. Without this, a batch from
+                # an old writer landing only in currently-empty
+                # buckets would NARROW the manifest schema and
+                # _aligned_read would silently drop the newer columns
+                # still present in carried-forward files — breaking
+                # the additive-evolution contract on exactly the path
+                # that skips the unionByName above.
+                empty_base = b.sparkSession.createDataFrame(
+                    [], self._schema_of(base_raw)
+                )
+                merged = self._with_bucket(empty_base).unionByName(
+                    b, allowMissingColumns=True
+                )
+            else:
+                merged = b
+            w = Window.partitionBy(*self.key_cols).orderBy(
+                F.col(self.order_col).desc()
+            )
+            latest = (
+                merged.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+            if tombstone_filter is not None:
+                latest = latest.filter(f"NOT ({tombstone_filter})")
+            new_files = self._stage_rewrite(
+                latest, len(touched), self.order_col
             )
         finally:
             b.unpersist()
-
-    def _prepare_merge_pinned(
-        self, b, base_id, base_bb, base_raw, tombstone_filter,
-        properties,
-    ):
-        base_schema_json = base_raw["schema"] if base_raw else None
-        touched = self._buckets_of(b)
-        replaced = [
-            f
-            for bkt in touched
-            for f in self._entries(base_bb.get(bkt, []))
-        ]
-        if not touched:
-            # Empty batch: leave history clean (the caller's run is
-            # still checkpoint-tracked); first-ever commit records an
-            # empty snapshot so the table becomes readable. If the
-            # caller asked to stamp PROPERTIES, an existing table gets
-            # a metadata-only commit (all base files carried forward,
-            # no data write) instead of a silent return — otherwise an
-            # IVM view's `reflects_base` watermark would lag on no-op
-            # batches and every later fold would walk changes() across
-            # a growing span, breaking latest_property's documented
-            # "stamped on every commit reads ONE manifest" fast path
-            # (ADVICE r08).
-            if base_id is not None and not properties:
-                return base_id
-            if base_id is None:
-                m, nid = self._build_commit(
-                    b.drop("__bucket").schema.json(), [], [],
-                    operation="merge", base_id=None,
-                    properties=properties,
-                )
-                return m, nid, None
-            # Metadata-only commit: every bucket carried by reference
-            # — an O(1)-manifest delta with zero bucket entries.
-            return self._build_delta(
-                base_schema_json, base_bb, {}, operation="merge",
-                base_id=base_id, properties=properties,
-            )
-
-        if replaced:
-            # Use the batch's own session (inside foreachBatch the
-            # micro-batch frame belongs to a cloned session; a union
-            # must not cross sessions). Aligned to the BASE schema so
-            # files predating an earlier evolution read consistently.
-            cur = self._read_entries(
-                replaced,
-                self._schema_of(base_raw),
-                spark=b.sparkSession,
-            )
-            # allowMissingColumns = ADDITIVE schema evolution: a batch
-            # with a new column widens the table (old rows read NULL);
-            # a batch from an old writer gets NULLs for newer columns.
-            # Same-name type conflicts fail loudly inside unionByName.
-            merged = self._with_bucket(cur).unionByName(
-                b, allowMissingColumns=True
-            )
-        elif base_id:
-            # No touched bucket has existing files, but the table has
-            # a schema history: union against an EMPTY frame in the
-            # base manifest's schema so the recorded schema is always
-            # base ∪ batch. Without this, a batch from an old writer
-            # landing only in currently-empty buckets would NARROW the
-            # manifest schema and _aligned_read would silently drop
-            # the newer columns still present in carried-forward files
-            # — breaking the additive-evolution contract on exactly
-            # the path that skips the unionByName above.
-            empty_base = b.sparkSession.createDataFrame(
-                [], self._schema_of(base_raw)
-            )
-            merged = self._with_bucket(empty_base).unionByName(
-                b, allowMissingColumns=True
-            )
-        else:
-            merged = b
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            F.col(self.order_col).desc()
-        )
-        latest = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if tombstone_filter is not None:
-            latest = latest.filter(f"NOT ({tombstone_filter})")
-
-        # Stage new data files under unique names (never visible to
-        # readers until the manifest claim).
-        run = uuid.uuid4().hex[:12]
-        staging = os.path.join(self._data_dir, f".staging-{run}")
-        (
-            # sortWithinPartitions on the order column: free at write
-            # time (per-task sort of one bucket's rows), and it makes
-            # the parquet ROW-GROUP statistics monotone within each
-            # file — so a pushed-down range predicate (read_range /
-            # read_where on the order column, or any caller filtering
-            # it) skips whole row groups inside the files the
-            # manifest-level prune could not exclude. File-level stats
-            # are unchanged (same rows per file); this tightens the
-            # layer below them.
-            latest.repartition(len(touched), "__bucket")
-            .sortWithinPartitions("__bucket", self.order_col)
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(staging)
-        )
-        new_files = self._promote_staged(staging, run)
-        evolved_json = latest.drop("__bucket").schema.json()
         # Touched buckets map to their new file lists — a bucket whose
         # every row was tombstoned stages nothing and records [] (the
         # emptied-bucket delta entry). Untouched buckets are carried
         # BY REFERENCE through base_bb; nothing O(table) is built.
-        touched_new: dict[int, list[dict]] = {bkt: [] for bkt in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
         return self._build_delta(
-            evolved_json, base_bb, touched_new, operation="merge",
-            base_id=base_id, properties=properties,
+            latest.drop("__bucket").schema.json(), base_bb,
+            {bkt: [] for bkt in touched}, operation="merge",
+            base_id=base_id, properties=properties, new_files=new_files,
         )
 
     def _promote_staged(self, staging: str, run: str) -> list[dict]:
@@ -3913,154 +3835,6 @@ class SnapshotTable:
             F.col(self.order_col).between(F.lit(lo), F.lit(hi))
         )
 
-    def _commit(
-        self,
-        schema_json: str,
-        carried: list[dict],
-        new_files: list[dict],
-        operation: str,
-        base_id: int | None,
-        properties: dict | None = None,
-    ) -> int:
-        """The commit point: claim ``manifest-<N>`` via os.link (the
-        CAS), then advance the pointer hint.
-
-        ``base_id`` is the snapshot the MERGE was computed against —
-        the claim targets exactly ``base_id + 1``, so a racing writer
-        that committed in between makes the claim fail (its manifest
-        owns that id) and the whole merge retries on the new current.
-        Recomputing current here instead would silently drop the
-        winner's files from the carried-forward list.
-
-        On-disk form: a v2 DELTA manifest holding only the buckets
-        whose file lists changed vs the parent (see ``_manifest`` for
-        the resolution contract) — commit metadata is O(touched
-        buckets), not O(table files). Full manifests are written at
-        the root, every ``FULL_MANIFEST_EVERY``-th id (bounds the
-        resolution walk), and on any bucket-count change (bucket
-        numbers mean different things across a rebucket, so a delta
-        against the old layout would be incoherent)."""
-        manifest, new_id = self._build_commit(
-            schema_json, carried, new_files, operation, base_id,
-            properties,
-        )
-        return self._claim(manifest, new_id)
-
-    def _build_commit(
-        self,
-        schema_json: str,
-        carried: list[dict],
-        new_files: list[dict],
-        operation: str,
-        base_id: int | None,
-        properties: dict | None = None,
-    ) -> tuple[dict, int]:
-        """Manifest construction half of :meth:`_commit`, separated so
-        a grouped transaction (:class:`SnapshotGroup`) can build every
-        member's manifest BEFORE the single group claim."""
-        # Field-id tracking (round 16): a FRESH table stamps stable
-        # ids at create; a whole-table rewrite on a tracked table
-        # inherits ids BY NAME for fields the frame didn't stamp (an
-        # overwrite with a user-built frame keeps stable ids), stamps
-        # genuinely new columns fresh, and RECLAIMS the name
-        # machinery — no pre-rewrite file survives, so prior-name
-        # lineages and the retired registry would only contradict the
-        # post-rewrite schema (review r16: a stale retired entry next
-        # to a re-created live column of the same name). Legacy
-        # (pre-fid) tables are left untouched until an evolution verb
-        # upgrades them.
-        if self._last_fid and base_id is not None:
-            schema_json = self._inherit_fids_json(
-                schema_json, self._raw_meta(base_id)["schema"]
-            )
-            schema_json = self._strip_priors_json(schema_json)
-            self._retired = {}
-        if base_id is None or self._last_fid:
-            schema_json = self._stamp_fids_json(schema_json)
-        new_id = (base_id or 0) + 1
-        all_files = carried + new_files
-        by_bucket: dict[int, list[dict]] = {}
-        for f in all_files:
-            by_bucket.setdefault(f["bucket"], []).append(f)
-        manifest = {
-            "snapshot_id": new_id,
-            "parent": base_id,
-            "operation": operation,
-            "key_cols": self.key_cols,
-            "order_col": self.order_col,
-            "n_buckets": self.n_buckets,
-            "bucket_cols": self.bucket_cols,
-            "schema": schema_json,
-            "format": 3,
-        }
-        if self.bloom_cols:  # absent key = feature off (back-compat)
-            manifest["bloom_cols"] = self.bloom_cols
-        if self._last_fid:
-            manifest["last_fid"] = self._last_fid
-        if self._retired:
-            manifest["retired"] = dict(self._retired)
-        full = base_id is None or new_id % FULL_MANIFEST_EVERY == 0
-        if not full:
-            parent = self._manifest(base_id)
-            if parent["n_buckets"] != self.n_buckets:
-                full = True
-        if full:
-            manifest["full"] = True
-            manifest["buckets"] = {
-                str(b): self._maybe_segment(new_id, b, fs)
-                for b, fs in by_bucket.items()
-            }
-        else:
-            p_by_bucket: dict[int, list[str]] = {}
-            for f in parent["files"]:
-                p_by_bucket.setdefault(f["bucket"], []).append(f["path"])
-            delta = {}
-            for b in set(p_by_bucket) | set(by_bucket):
-                cur = sorted(f["path"] for f in by_bucket.get(b, []))
-                if cur != sorted(p_by_bucket.get(b, [])):
-                    delta[str(b)] = by_bucket.get(b, [])
-            manifest["buckets"] = delta
-        if properties:
-            manifest["properties"] = properties
-        return manifest, new_id
-
-    def _commit_delta(
-        self,
-        schema_json: str,
-        parent_by_bucket: dict[int, list[dict]],
-        touched_new: dict[int, list[dict]],
-        operation: str,
-        base_id: int | None,
-        properties: dict | None = None,
-        rebase_ok: bool = False,
-    ) -> int:
-        """The O(touched) commit path (VERDICT r09 item 5): untouched
-        buckets are carried BY REFERENCE from ``parent_by_bucket``
-        (the structurally-shared :meth:`_by_bucket` view) — neither
-        the delta computation nor the manifest write ever iterates
-        them. A touched bucket's new file list differs from its
-        parent's by construction (staged files get fresh immutable
-        names), so the delta IS ``touched_new`` — no O(F) comparison
-        pass. Only the ``FULL_MANIFEST_EVERY``-th commit (and a
-        bucket-count change) materializes the merged view — O(F)
-        amortized to O(F / 16) per commit, the documented resolution-
-        bound trade."""
-        manifest, new_id, merged_bb = self._build_delta(
-            schema_json, parent_by_bucket, touched_new, operation,
-            base_id, properties,
-        )
-        try:
-            sid = self._claim(manifest, new_id)
-        except CommitConflict:
-            if not rebase_ok:
-                raise
-            return self._rebase_commit(
-                schema_json, touched_new, operation, base_id,
-                properties,
-            )
-        self._prime_bb(sid, merged_bb)
-        return sid
-
     def _diverged_buckets(
         self, from_id: int | None, to_id: int | None
     ) -> set:
@@ -4319,14 +4093,25 @@ class SnapshotTable:
             f"rebase: lost the claim race {max_rebases} times"
         ) from last
 
-    def _claim_or_rebase(self, prep) -> int:
-        """Shared claim tail of the prepare-style verbs (append,
-        merge): claim the prepared manifest; on a lost CAS, attempt
-        the optimistic rebase with the ingredients recovered FROM the
-        manifest itself. A FULL-anchor manifest never rebases — it
-        re-raises for the verb's re-plan (see the inline comment:
-        its touched set is unreconstructible because full manifests
-        drop empty buckets)."""
+    def _claim_or_rebase(self, prep, rebase_ok: bool = False) -> int:
+        """The one claim tail every commit runs: claim a prepared
+        ``(manifest, new_id, merged_bb)`` and prime the per-bucket
+        cache with the merged view; an ``int`` prepare is a no-op
+        that returns that (base) id unchanged.
+
+        On a lost CAS a ``rebase_ok`` verb — one whose touched and
+        read buckets bound what it depends on (the keyed verbs,
+        compact, and the predicate verbs with their recorded
+        ``read.predicate``) — attempts the optimistic rebase with the
+        ingredients recovered FROM the manifest itself. Whole-table
+        rewrites (overwrite, rewrite_zorder, rebucket), metadata-only
+        evolution and branch publish never rebase: the
+        ``CommitConflict`` propagates to the verb's re-plan. A
+        FULL-anchor manifest never rebases either (see the inline
+        comment: its touched set is unreconstructible because full
+        manifests drop empty buckets)."""
+        if isinstance(prep, int):
+            return prep
         manifest, new_id, merged_bb = prep
         try:
             sid = self._claim(manifest, new_id)
@@ -4338,7 +4123,7 @@ class SnapshotTable:
             # instead (review r15; the full view also reports every
             # bucket touched, which made the rebase near-useless here
             # anyway).
-            if manifest.get("full"):
+            if not rebase_ok or manifest.get("full"):
                 raise
             return self._rebase_commit(
                 manifest["schema"],
@@ -4347,8 +4132,7 @@ class SnapshotTable:
                 manifest.get("parent"),
                 manifest.get("properties"),
             )
-        if merged_bb is not None:
-            self._prime_bb(sid, merged_bb)
+        self._prime_bb(sid, merged_bb)
         return sid
 
     def _build_delta(
@@ -4359,11 +4143,40 @@ class SnapshotTable:
         operation: str,
         base_id: int | None,
         properties: dict | None = None,
+        new_files: "list[dict] | tuple" = (),
     ) -> tuple[dict, int, dict]:
-        """Manifest construction half of :meth:`_commit_delta` (see
-        :meth:`_build_commit` for why it is separable). Returns the
-        manifest, the id it claims, and the merged per-bucket view to
-        prime the cache with AFTER a successful claim."""
+        """The one manifest builder (VERDICT r09 item 5 — the
+        O(touched) commit): returns the manifest, the id it claims
+        (``base_id + 1``, so a racing writer that committed in
+        between makes the claim fail rather than silently dropping
+        its files), and the merged per-bucket view to prime the cache
+        with AFTER a successful claim. Building is separate from
+        claiming so a grouped transaction (:class:`SnapshotGroup`)
+        can build every member's manifest BEFORE the single group
+        claim.
+
+        ``touched_new`` maps each touched bucket to its new entry
+        list; ``new_files`` (a staged write's entries) join their
+        buckets' lists, a bucket not yet listed starting from its
+        parent's entries (append's add-only shape). Untouched buckets
+        are carried BY REFERENCE from ``parent_by_bucket`` (the
+        structurally-shared :meth:`_by_bucket` view) — neither the
+        delta nor the manifest write ever iterates them, and a staged
+        file's fresh immutable name means a touched bucket differs
+        from its parent by construction, so the delta IS
+        ``touched_new``. Full manifests are written at the root,
+        every ``FULL_MANIFEST_EVERY``-th id (bounds the resolution
+        walk; O(F) amortized to O(F / 16) per commit) and on any
+        bucket-count change (bucket numbers mean different things
+        across a rebucket, so a delta against the old layout would be
+        incoherent)."""
+        for f in new_files:
+            b = f["bucket"]
+            if b not in touched_new:
+                touched_new[b] = list(
+                    self._entries(parent_by_bucket.get(b, []))
+                )
+            touched_new[b].append(f)
         if self._last_fid:
             # fid-tracked table: any fid-less field is a new column
             # from append's additive evolution — reserved-name guard
@@ -4436,8 +4249,9 @@ class SnapshotTable:
             self._bcache.pop(next(iter(self._bcache)))
 
     def _claim(self, manifest: dict, new_id: int) -> int:
-        """Durable-write + os.link CAS + pointer advance — the shared
-        tail of both commit forms."""
+        """Durable-write + os.link CAS + pointer advance — the commit
+        point, reached only through :meth:`_claim_or_rebase` and
+        :meth:`_rebase_commit`."""
         os.makedirs(self._manifest_dir, exist_ok=True)
         tmp = self._write_manifest_tmp(manifest)
         target = os.path.join(self._manifest_dir, self._mname(new_id))
@@ -4461,8 +4275,9 @@ class SnapshotTable:
     def _write_manifest_tmp(self, manifest: dict) -> str:
         """Serialize a manifest to a durable temp file (write + flush +
         fsync) and return its path — the ONE place the on-disk JSON is
-        produced, shared by the _commit CAS link and expire_snapshots'
-        floor materialization so the two can never drift."""
+        produced, shared by the _claim CAS link, the group txn's
+        member temps and expire_snapshots' floor materialization so
+        they can never drift."""
         os.makedirs(self._manifest_dir, exist_ok=True)
         tmp = os.path.join(
             self._manifest_dir, f".tmp-{uuid.uuid4().hex[:12]}.json"
@@ -4509,7 +4324,7 @@ class SnapshotTable:
         records its own ``n_buckets``, and ``read_keys`` prunes with
         the target snapshot's count), concurrent writers race on the
         same CAS (a merge that loses to a rebucket retries and adopts
-        the new layout via ``_merge_once``'s manifest-first rule),
+        the new layout via ``_prepare_merge``'s manifest-first rule),
         and a crash leaves the old snapshot current. ``changes``
         across a rebucket boundary stays CORRECT but unpruned — every
         file path is new, so every bucket's list differs and both
@@ -4530,21 +4345,23 @@ class SnapshotTable:
             # split and break every read_matching prune downstream.
             # Only the COUNT changes here; the column split is part of
             # the table's access-path contract.
-            self._adopt_layout(self._raw_meta(base_id))
+            base_raw = self._raw_meta(base_id)
+            self._adopt_layout(base_raw)
             self.n_buckets = new_n_buckets
-            b = self._with_bucket(cur)
-            run = uuid.uuid4().hex[:12]
-            staging = os.path.join(self._data_dir, f".staging-{run}")
-            (
-                b.repartition(new_n_buckets, "__bucket")
-                .write.mode("overwrite")
-                .partitionBy("__bucket")
-                .parquet(staging)
+            new_files = self._stage_rewrite(
+                self._with_bucket(cur), new_n_buckets, None
             )
-            new_files = self._promote_staged(staging, run)
-            return self._commit(
-                cur.schema.json(), [], new_files,
-                operation="rebucket", base_id=base_id,
+            # Nothing carries from the old layout: a new bucket count
+            # writes a full manifest of exactly the new files. An
+            # unchanged count writes a delta of every bucket that got
+            # rows — the same hash puts rows in the same buckets, so
+            # no parent bucket with live rows is left un-replaced.
+            return self._claim_or_rebase(
+                self._build_delta(
+                    self._rewrite_schema(cur.schema.json(), base_raw),
+                    {}, {}, operation="rebucket", base_id=base_id,
+                    new_files=new_files,
+                )
             )
 
         return self._retry("rebucket", once, max_retries)
@@ -4589,10 +4406,12 @@ class SnapshotTable:
                 # tracking (ids in declaration order) in this commit
                 schema_json = self._stamp_fids_json(schema_json)
             st = T.StructType.fromJson(json.loads(schema_json))
-            return self._commit_delta(
-                fn(st, base_raw).json(), self._by_bucket(base_id), {},
-                operation="evolve", base_id=base_id,
-                properties={"evolve.op": label},
+            return self._claim_or_rebase(
+                self._build_delta(
+                    fn(st, base_raw).json(), self._by_bucket(base_id), {},
+                    operation="evolve", base_id=base_id,
+                    properties={"evolve.op": label},
+                )
             )
 
         return self._retry(f"{label}:", once, max_retries)
@@ -5263,19 +5082,20 @@ class SnapshotBranch(SnapshotTable):
             if isinstance(prep, int):  # crash recovery: published
                 self._cleanup_branch_names(ids)
                 return prep
-            manifest, new_id, merged_bb = prep
             try:
-                self._main._claim(manifest, new_id)
+                sid = self._main._claim_or_rebase(prep)
             except CommitConflict as e:
                 # A racer claimed this id between prepare and claim —
                 # re-prepare: the optimistic validation re-runs
                 # against the NEW head (disjoint-bucket winners are
-                # absorbed; overlapping ones raise the refusal).
+                # absorbed; overlapping ones raise the refusal, which
+                # is itself a CommitConflict — so this loop, not
+                # _retry, owns the attempts: _retry would re-plan the
+                # refusal away).
                 last = e
                 continue
-            self._main._prime_bb(new_id, merged_bb)
             self._cleanup_branch_names(ids)
-            return new_id
+            return sid
         raise CommitConflict(
             "publish: lost the claim race 5 times; re-create the "
             f"branch from current main (fork base {self.branch_base})"
