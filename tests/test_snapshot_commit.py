@@ -7,8 +7,9 @@ the rows read back, whether one injected lost CAS rebases (one staged
 write) or re-plans (two), and that no call leaves a persisted RDD
 behind. Plus the commit-path invariants every verb now shares: field-id
 tracking starts at the first evolution commit however the table was
-created, a lost full-anchor claim re-plans, and ``snapshot.py`` has one
-staged data write and one claim tail. One tiny table per case."""
+created, a lost full-anchor claim re-plans, so does a rename of the
+order column, and ``snapshot.py`` has one staged data write, one claim
+tail and one row-level DML attempt. One tiny table per case."""
 
 from __future__ import annotations
 
@@ -376,6 +377,30 @@ def test_lost_full_anchor_claim_replans(spark, tmp_path, monkeypatch, verb):
     assert _rows(mk(spark, tdir)) == want
 
 
+def test_rename_of_the_order_column_replans_after_a_lost_cas(
+    spark, tmp_path, monkeypatch
+):
+    """A rename that moves the handle's order column and loses its
+    claim re-plans on the winner's state: the lost attempt must not
+    leave the handle renamed, or the re-plan's layout adoption refuses
+    it as a re-keying handle."""
+    _, kA, _, kB, _ = _keys(spark)
+    tdir = str(tmp_path / "tbl")
+    t, w = mk(spark, tdir), mk(spark, tdir)
+    t.append(batch(spark, [(kA, 1)]))
+    inject_race(
+        monkeypatch, t, lambda: w.append(batch(spark, [(kB, 1)]))
+    )
+    sid = t.rename_column("ver", "version")
+    monkeypatch.undo()
+    assert sid == 3 == mk(spark, tdir).current_id()
+    raw = mk(spark, tdir)._manifest_raw(sid)
+    assert raw["parent"] == 2
+    assert raw["order_col"] == "version" == t.order_col
+    assert raw.get("properties") == {"evolve.op": "rename:ver->version"}
+    assert _rows(mk(spark, tdir)) == {(kA, 1), (kB, 1)}
+
+
 def _calls_by_function(path, match):
     """{enclosing function name} of every call node ``match`` accepts."""
     tree = ast.parse(open(path).read())
@@ -404,10 +429,27 @@ def test_one_staged_write_and_one_claim_tail():
     def claim(c):
         return isinstance(c.func, ast.Attribute) and c.func.attr == "_claim"
 
+    def calls(name):
+        return lambda c: getattr(c.func, "attr", None) == name
+
+    def retried_dml(c):  # self._retry(..., lambda: self._dml_once(...))
+        return calls("_retry")(c) and any(
+            isinstance(a, ast.Lambda)
+            and isinstance(a.body, ast.Call)
+            and calls("_dml_once")(a.body)
+            for a in c.args
+        )
+
     src = snapshot.__file__
     assert _calls_by_function(src, bucket_write) == ["_stage_rewrite"]
     assert sorted(set(_calls_by_function(src, claim))) == [
         "_claim_or_rebase", "_rebase_commit",
     ]
+    # every row-level verb is a MERGE form of the one DML attempt, run
+    # under the one CAS loop; only that attempt writes deletion vectors
+    verbs = ["delete_keys", "delete_where", "merge_into", "update_where"]
+    assert sorted(_calls_by_function(src, retried_dml)) == verbs
+    assert sorted(_calls_by_function(src, calls("_dml_once"))) == verbs
+    assert _calls_by_function(src, calls("_commit_dv")) == ["_dml_once"]
     group = os.path.join(os.path.dirname(src), "group.py")
     assert _calls_by_function(group, claim) == []

@@ -1,9 +1,12 @@
 """Commit parity of the row-level DML verbs: for delete_where,
-update_where and delete_keys in both physical modes (copy-on-write
-rewrite, merge-on-read deletion vectors), pin the committed manifest's
-``operation`` and FULL ``properties`` dict, the rows read back, the
-no-match no-op, the re-plan after a lost CAS, and that no call leaves
-a persisted RDD behind. One tiny table per case."""
+update_where, delete_keys and two merge_into clause sets (a
+conditional update with insert; a delete without insert) in both
+physical modes (copy-on-write rewrite, merge-on-read deletion
+vectors), pin the committed manifest's ``operation`` and FULL
+``properties`` dict, the rows read back, the no-match no-op, the
+re-plan after a lost CAS, and that no call leaves a persisted RDD
+behind. One tiny table per case; the remaining merge_into clause sets
+are pinned by one sequential test on one table."""
 
 from __future__ import annotations
 
@@ -25,9 +28,22 @@ def rows3(spark, triples):
     return spark.createDataFrame(list(triples), "k long, ver long, v long")
 
 
+COND = "s_ver > t_ver"
+
+
 def _verb(spark, verb, mode):
     """``(table, target) -> sid`` — ``target`` is a predicate for the
-    predicate verbs and a key for delete_keys."""
+    predicate verbs, a key for delete_keys and a list of source rows
+    for merge_into."""
+    if verb == "merge_into_upsert_if":
+        return lambda t, src: t.merge_into(
+            rows3(spark, src), matched_condition=COND, mode=mode
+        )
+    if verb == "merge_into_delete":
+        return lambda t, src: t.merge_into(
+            rows3(spark, src), when_matched="delete",
+            when_not_matched="ignore", mode=mode,
+        )
     if verb == "delete_where":
         return lambda t, p: t.delete_where(p, mode=mode)
     if verb == "update_where":
@@ -38,6 +54,22 @@ def _verb(spark, verb, mode):
 
 
 def _expected(verb, mode, pred, b_hit):
+    if verb.startswith("merge_into"):
+        upsert = verb == "merge_into_upsert_if"
+        props = {
+            "merge_into.when_matched": "update" if upsert else "delete",
+            "merge_into.when_not_matched": "insert" if upsert else "ignore",
+        }
+        # the two modes have always ordered the condition differently
+        # around the read set; manifests are written unsorted, so the
+        # order is pinned too
+        if mode == "mor":
+            props["merge_into.mode"] = "mor"
+            props["read.buckets"] = [b_hit]
+        if upsert:
+            props["merge_into.matched_condition"] = COND
+        props.setdefault("read.buckets", [b_hit])
+        return "merge_into", props
     if verb == "delete_where":
         props = {"delete.predicate": pred, "read.predicate": pred}
         if mode == "mor":
@@ -59,7 +91,11 @@ def _expected(verb, mode, pred, b_hit):
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
 @pytest.mark.parametrize(
-    "verb", ["delete_where", "update_where", "delete_keys"]
+    "verb",
+    [
+        "delete_where", "update_where", "delete_keys",
+        "merge_into_upsert_if", "merge_into_delete",
+    ],
 )
 def test_dml_verb_manifest_parity_and_no_pinned_cache(
     spark, tmp_path, monkeypatch, verb, mode
@@ -69,12 +105,12 @@ def test_dml_verb_manifest_parity_and_no_pinned_cache(
     keys = sorted(by_bucket.values())
     b_hit = sorted(by_bucket)[0]
     k_hit = by_bucket[b_hit]
-    # two keys the DML does not target, in the targeted key's bucket:
+    # three keys the DML does not target, in the targeted key's bucket:
     # one shares its file (so a deletion vector leaves the file live),
-    # the other is the racing winner's row — its commit overlaps the
-    # loser's touched bucket, so the rebase refuses and the verb
-    # re-plans on the winner's state
-    k_also, k_win = keys_in_bucket(spark, b_hit, 2, exclude=keys)
+    # one is the racing winner's row — its commit overlaps the loser's
+    # touched bucket, so the rebase refuses and the verb re-plans on
+    # the winner's state — and one is the conditional upsert's insert
+    k_also, k_win, k_new = keys_in_bucket(spark, b_hit, 3, exclude=keys)
     keys.append(k_also)
     t = mk(spark, tdir)
     t.append(rows3(spark, [(k, 100, 10 * k) for k in keys]))
@@ -88,12 +124,20 @@ def test_dml_verb_manifest_parity_and_no_pinned_cache(
     before = pinned()
 
     # no-match: the candidate read finds no row — no commit, no pin
-    miss = -1 if verb == "delete_keys" else f"k = {k_hit} AND v + 1 < 0"
+    # (the conditional upsert's source row matches but does not fire,
+    # and a matched key is never inserted)
+    miss, hit = {
+        "delete_keys": (-1, k_hit),
+        "merge_into_upsert_if": (
+            [(k_hit, 100, 10 * k_hit)],
+            [(k_hit, 101, 10 * k_hit + 1), (k_new, 100, 10 * k_new)],
+        ),
+        "merge_into_delete": ([(-1, 100, 0)], [(k_hit, 100, 10 * k_hit)]),
+    }.get(verb, (f"k = {k_hit} AND v + 1 < 0", f"k = {k_hit}"))
     assert call(t, miss) == 1
     assert t.snapshot_ids() == [1]
     assert pinned() == before
 
-    hit = k_hit if verb == "delete_keys" else f"k = {k_hit}"
     inject_race(
         monkeypatch, t,
         lambda: winner.append(
@@ -116,10 +160,14 @@ def test_dml_verb_manifest_parity_and_no_pinned_cache(
     op, props = _expected(verb, mode, hit, b_hit)
     assert raw["operation"] == op
     assert raw.get("properties") == props
+    if verb.startswith("merge_into"):
+        assert list(raw["properties"]) == list(props)
     assert raw["parent"] == 2
 
     want = {k: 10 * k for k in [*keys, k_win]}
-    if verb == "update_where":
+    if verb == "merge_into_upsert_if":
+        want[k_new] = 10 * k_new
+    if verb in ("update_where", "merge_into_upsert_if"):
         want[k_hit] += 1
     else:
         del want[k_hit]
@@ -134,3 +182,48 @@ def test_dml_verb_manifest_parity_and_no_pinned_cache(
                 os.path.join(tdir, "data")
             )
         )
+
+
+def test_merge_into_remaining_clause_sets_pin_their_properties(
+    spark, tmp_path
+):
+    """The clause sets the parametrized test leaves out — matched rows
+    ignored with inserts, and updates without inserts — in both modes,
+    one commit each on one table: operation, FULL properties, rows."""
+    by_bucket = keys_in_distinct_buckets(spark)
+    bucket = {k: b for b, k in by_bucket.items()}
+    k0, k1, k2, k3 = (by_bucket[b] for b in sorted(by_bucket))
+    t = mk(spark, str(tmp_path / "tbl"))
+    t.append(rows3(spark, [(k0, 100, 0)]))
+    want = {k0: (100, 0)}
+    # (when_matched, when_not_matched, mode, source, effect): each
+    # source matches one live key and names one key the table lacks
+    steps = [
+        ("ignore", "insert", "cow",
+         [(k0, 200, 1), (k1, 100, 1)], {k1: (100, 1)}),
+        ("ignore", "insert", "mor",
+         [(k1, 200, 2), (k2, 100, 2)], {k2: (100, 2)}),
+        ("update", "ignore", "cow",
+         [(k0, 101, 3), (k3, 100, 3)], {k0: (101, 3)}),
+        ("update", "ignore", "mor",
+         [(k1, 101, 4), (k3, 100, 4)], {k1: (101, 4)}),
+    ]
+    for sid, (wm, wnm, mode, src, effect) in enumerate(steps, start=2):
+        got = t.merge_into(
+            rows3(spark, src), when_matched=wm, when_not_matched=wnm,
+            mode=mode,
+        )
+        assert got == sid
+        props = {
+            "merge_into.when_matched": wm,
+            "merge_into.when_not_matched": wnm,
+        }
+        if mode == "mor":
+            props["merge_into.mode"] = "mor"
+        props["read.buckets"] = sorted(bucket[k] for k, _, _ in src)
+        raw = mk(spark, t.table_dir)._manifest_raw(sid)
+        assert raw["operation"] == "merge_into"
+        assert list(raw["properties"].items()) == list(props.items())
+        want.update(effect)
+        back = mk(spark, t.table_dir).read().collect()
+        assert {r["k"]: (r["ver"], r["v"]) for r in back} == want

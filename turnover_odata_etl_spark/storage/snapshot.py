@@ -2122,15 +2122,19 @@ class SnapshotTable:
         ``expire_snapshots``), and the predicate is recorded on the
         manifest as the ``delete.predicate`` property for audit.
 
-        All three row-level DML verbs (this one, :meth:`update_where`
-        and :meth:`delete_keys`) share one pipeline per attempt,
-        :meth:`_dml_once`: ``touched = prune(...)`` — the predicate's
-        stats + bloom split, or the keys' layout hash — then one
-        candidate read marking each row's ``__hit``, then
-        ``effect = rewrite(touched) | dv(touched)`` — a copy-on-write
-        rewrite of the touched buckets, or a deletion-vector sidecar
-        of the hit positions — then ``commit(effect)`` under the
-        shared CAS retry (:meth:`_retry`)."""
+        All four row-level DML verbs are forms of SQL MERGE — this
+        one (a predicate match, then delete), :meth:`update_where` (a
+        predicate match, then set), :meth:`delete_keys` (a key match,
+        then delete) and :meth:`merge_into` (a key match, then delete,
+        set or keep, plus an optional insert) — and share one pipeline
+        per attempt, :meth:`_dml_once`: ``touched = prune(...)`` — the
+        predicate's stats + bloom split, or the source keys' layout
+        hash — then one candidate read marking each row's ``__hit``,
+        then ``effect = rewrite(touched) | dv(touched)`` — a
+        copy-on-write rewrite of the touched buckets, or a
+        deletion-vector sidecar of the hit positions — then
+        ``commit(effect)`` under the shared CAS retry
+        (:meth:`_retry`)."""
         if mode not in ("cow", "mor"):
             raise ValueError(
                 f"delete_where: mode must be 'cow' or 'mor', got {mode!r}"
@@ -2162,41 +2166,58 @@ class SnapshotTable:
         mor: bool,
         predicate: str | None = None,
         keys_df: DataFrame | None = None,
+        source: DataFrame | None = None,
+        matched_condition: str | None = None,
+        when_matched: str = "delete",
         assignments: dict[str, str] | None = None,
+        when_not_matched: str = "ignore",
     ) -> int:
-        """One attempt of a row-level DML verb: ``delete_where`` (a
-        ``predicate``), ``update_where`` (a ``predicate`` and
-        ``assignments``) or ``delete_keys`` (a ``keys_df``), in
-        copy-on-write or merge-on-read (``mor``) form.
+        """One attempt of a row-level DML verb. Each verb is a form of
+        SQL ``MERGE``, and the parameters are MERGE's clauses:
+        ``delete_where`` matches a ``predicate`` ``THEN DELETE``;
+        ``update_where`` matches a ``predicate`` ``THEN UPDATE SET
+        assignments``; ``delete_keys`` matches the keys of a
+        ``keys_df`` ``THEN DELETE``; ``merge_into`` matches the keys of
+        a ``source`` of full rows, ``[AND matched_condition] THEN``
+        delete, ``UPDATE SET *`` or nothing (``when_matched``), and
+        ``WHEN NOT MATCHED THEN INSERT`` or nothing
+        (``when_not_matched``). Each runs in copy-on-write or
+        merge-on-read (``mor``) form.
 
         * **Prune.** A predicate splits files by footer stats and
           blooms (:meth:`_split_candidates`); disjoint files carry by
-          reference. A keys frame is CAST to the table's key types
+          reference. A keyed source is CAST to the table's types
           before hashing AND matching — Spark's hash is type-sensitive
           (hash(7 as int) != hash(7 as long)), so an int-typed keys
           frame against a long-keyed table would prune the wrong
           buckets and SILENTLY DELETE NOTHING (the read_matching
-          alignment, review r11) — then deduped and persisted, since
-          it feeds both the bucket-target collect and the match join
-          (without the pin a nondeterministic lineage could hash one
-          version and join another). Only its buckets' files are
-          candidates.
+          alignment, review r11) — then persisted, since it feeds the
+          bucket-target collect, the match join and the insert
+          anti-join (without the pin a nondeterministic lineage could
+          hash one version and join another). A keys frame is deduped;
+          a MERGE source with a repeated key is refused (one source
+          row per target key). Only its buckets' files are candidates.
         * **Hit.** One read of the candidates marks each row's
           ``__hit``: the predicate with NULL as FALSE (SQL DML
           semantics — NULL rows survive), or a NULL-SAFE left join
-          against the keys. Merge-on-read keeps only the hits — the
-          predicate as a filter, the keys as a left-semi join — so
-          its plans carry no ``__hit`` column.
+          against the source, optionally narrowed by the
+          ``matched_condition`` over a ``t_``/``s_`` view.
+          Merge-on-read persists only the hits (a predicate's carry no
+          ``__hit`` column), unless it inserts: the insert anti-join
+          needs every candidate key.
         * **Effect.** Copy-on-write rewrites the touched buckets —
-          those holding an actual hit — with their survivors (delete)
-          or every row with the assignments applied to the hits
-          (update) through :meth:`_stage_rewrite`; candidate files of
-          untouched buckets and non-candidate files carry by
-          reference. Merge-on-read
-          hands the hits' ``(__fname, __pos)`` to :meth:`_commit_dv`,
-          the updated rows riding along as ``extra_files``; data files
-          are never rewritten, and the DV-applied read means a row an
-          earlier vector deleted can never be matched twice.
+          those holding an actual hit or an insert — with their
+          survivors (delete), every row with the assignments applied
+          to the hits (update) or every row (no matched action), plus
+          the bucket's inserts, through :meth:`_stage_rewrite`;
+          candidate files of untouched buckets and non-candidate files
+          carry by reference. Merge-on-read hands the hits'
+          ``(__fname, __pos)`` to :meth:`_commit_dv` (none when matched
+          rows are kept), the updated rows and inserts riding along as
+          ``extra_files``; data files are never rewritten, and the
+          DV-applied read means a row an earlier vector deleted can
+          never be matched twice. Inserts are the source rows whose
+          key no candidate row holds.
 
         The commit records the verb's ``audit`` properties (caller
         properties win) and its read set — ``read.predicate``, or the
@@ -2204,7 +2225,7 @@ class SnapshotTable:
         check validates reads too, the write-skew guard) — so a lost
         CAS can rebase (:meth:`_rebase_commit`); both effects build
         their manifest with :meth:`_build_delta` and claim it through
-        :meth:`_claim_or_rebase`. Nothing matched: returns the base id,
+        :meth:`_claim_or_rebase`. Nothing fired: returns the base id,
         no empty commit."""
         from pyspark import StorageLevel
 
@@ -2244,14 +2265,20 @@ class SnapshotTable:
                 col: F.expr(expr).cast(schema[col].dataType)
                 for col, expr in assignments.items()
             }
+        else:  # UPDATE SET *: every column from the matched source row
+            sets = {c: F.col(f"__s_{c}") for c in schema.names}
         base_bb = self._by_bucket(base_id)
         props = dict(properties or {})
         for k, v in audit.items():
             props.setdefault(k, v)
-        operation = "update" if assignments else "delete"
+        if source is not None:
+            operation = "merge_into"
+        else:
+            operation = "update" if when_matched == "update" else "delete"
+        insert = when_not_matched == "insert"
         pinned: list[DataFrame] = []
         try:
-            if keys_df is None:
+            if predicate is not None:
                 cand, kept = self._split_candidates(
                     base_bb, predicate_bounds(predicate)
                 )
@@ -2259,97 +2286,159 @@ class SnapshotTable:
                 hit = F.coalesce(F.expr(predicate), F.lit(False))
                 read_set = {"read.predicate": predicate}
             else:
-                keys = (
-                    keys_df.select(
-                        *[
-                            F.col(k).cast(schema[k].dataType).alias(k)
-                            for k in self.key_cols
-                        ]
+                frame = keys_df if source is None else source
+                cols = self.key_cols if source is None else schema.names
+                missing = [c for c in cols if c not in frame.columns]
+                if source is not None and missing:
+                    raise ValueError(
+                        f"merge_into: source is missing table columns "
+                        f"{missing} (full rows required — see docstring)"
                     )
-                    .dropDuplicates(self.key_cols)
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+                src = frame.select(
+                    *[F.col(c).cast(schema[c].dataType).alias(c) for c in cols]
                 )
-                pinned.append(keys)
-                target = self._buckets_of(self._with_bucket(keys))
+                if source is None:
+                    src = src.dropDuplicates(self.key_cols)
+                src = src.persist(StorageLevel.MEMORY_AND_DISK)
+                pinned.append(src)
+                if source is not None and (
+                    src.groupBy(*self.key_cols)
+                    .agg(F.count(F.lit(1)).alias("__n"))
+                    .filter(F.col("__n") > 1)
+                    .limit(1)
+                    .count()
+                ):
+                    raise ValueError(
+                        "merge_into: source has duplicate keys — SQL "
+                        "MERGE requires at most one source row per "
+                        "target key"
+                    )
+                target = self._buckets_of(self._with_bucket(src))
                 cand = {
                     b: self._entries(base_bb[b])
                     for b in target
                     if self._loc_n(base_bb.get(b, []))
                 }
                 kept = {}
-                # the keys frame's own session — inside foreachBatch
-                # the micro-batch belongs to a cloned session and a
-                # join must not cross sessions (the _prepare_merge rule)
-                spark = keys_df.sparkSession
-                marked = keys.select(
-                    *[F.col(k).alias(f"__k_{k}") for k in self.key_cols]
+                # the source's own session — inside foreachBatch the
+                # micro-batch belongs to a cloned session and a join
+                # must not cross sessions (the _prepare_merge rule)
+                spark = frame.sparkSession
+                marked = src.select(
+                    *[F.col(c).alias(f"__s_{c}") for c in cols],
+                    F.lit(True).alias("__hit"),
                 )
-                on = self._null_safe_keys("__k_")
                 read_set = {"read.buckets": [int(b) for b in target]}
-            if not cand:
+            if not cand and not insert:
                 return base_id  # stats/bloom/layout prove no match
             rows = self._read_entries(
                 [f for fs in cand.values() for f in fs],
                 schema, spark=spark, keep_meta=mor,
             )
-            if mor:
-                matched = (
-                    rows.filter(hit)
-                    if keys_df is None
-                    else rows.join(marked, on, "left_semi")
-                )
-                if not assignments:
-                    matched = matched.select("__fname", "__pos")
-                matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
-                pinned.append(matched)
-                new_files = None
-                if assignments:
-                    # updated rows keep their keys, so they land in
-                    # the buckets the dv flips already touch
-                    updated = self._with_bucket(
-                        matched.drop("__fname", "__pos")
-                    ).withColumns(sets)
-                    touched = self._buckets_of(updated)
-                    if not touched:
-                        return base_id
-                    new_files = self._stage_rewrite(
-                        updated, len(touched), self.order_col
+            if not mor:
+                rows = self._with_bucket(rows)
+            drop: list[str] = []
+            if predicate is None:
+                cur = rows.join(marked, self._null_safe_keys("__s_"), "left")
+                if matched_condition is not None:
+                    # The condition resolves against a frame exposing
+                    # ONLY the t_/s_ prefixed names — the row is packed
+                    # into a struct first, so a table that itself has a
+                    # column named t_x/s_x can never make the documented
+                    # prefix syntax ambiguous (review r12). A matched
+                    # row the condition does not fire loses its __hit.
+                    cur = cur.select(
+                        F.struct(
+                            *[c for c in cur.columns if c != "__hit"]
+                        ).alias("__row"),
+                        "__hit",
+                        *[F.col(c).alias(f"t_{c}") for c in schema.names],
+                        *[
+                            F.col(f"__s_{c}").alias(f"s_{c}")
+                            for c in schema.names
+                        ],
+                    ).select(
+                        "__row.*",
+                        F.when(
+                            F.expr(matched_condition), F.col("__hit")
+                        ).alias("__hit"),
                     )
-                    matched = matched.select("__fname", "__pos")
-                props.update(read_set)
-                return self._commit_dv(
-                    base_id, base_raw, base_bb, cand, matched, props,
-                    extra_files=new_files, operation=operation,
-                )
-            cur = self._with_bucket(rows)
-            if keys_df is None:
-                cur = cur.withColumn("__hit", hit)
+                miss = F.col("__hit").isNull()
+                drop = ["__hit", *[f"__s_{c}" for c in cols]]
+            elif mor:
+                cur = rows.filter(hit)
+            else:
+                cur = rows.withColumn("__hit", hit)
                 miss = ~F.col("__hit")
                 drop = ["__hit"]
-            else:
-                cur = cur.join(
-                    marked.withColumn("__hit", F.lit(True)), on, "left"
-                )
-                miss = F.col("__hit").isNull()
-                drop = ["__hit", *[f"__k_{k}" for k in self.key_cols]]
+            # merge-on-read keeps only the hits, unless the insert
+            # anti-join needs every candidate key
+            hits_only = mor and not insert
+            if hits_only and predicate is None:
+                cur = cur.filter("__hit")
+            if hits_only and when_matched == "delete":
+                cur = cur.select("__fname", "__pos")
             cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
             pinned.append(cur)
-            touched = self._buckets_of(cur.filter("__hit"))
+            hits = cur if hits_only else cur.filter("__hit")
+            touched = set()
+            if mor and when_matched == "update":
+                # updated rows keep their keys, so they land in the
+                # buckets the dv flips already touch
+                updated = self._with_bucket(
+                    hits.drop("__fname", "__pos")
+                ).withColumns(sets).drop(*drop)
+                touched = set(self._buckets_of(updated))
+            elif not mor and when_matched != "ignore":
+                touched = set(self._buckets_of(hits))
+            if insert:
+                ins = src.join(
+                    cur.select(
+                        *[F.col(k).alias(f"__b_{k}") for k in self.key_cols]
+                    ).dropDuplicates(),
+                    self._null_safe_keys("__b_"),
+                    "left_anti",
+                ).persist(StorageLevel.MEMORY_AND_DISK)
+                pinned.append(ins)
+                ins = self._with_bucket(ins)
+                touched |= set(self._buckets_of(ins))
+            touched = sorted(touched)
+            if mor:
+                if not touched and when_matched != "delete":
+                    return base_id  # nothing to stage, nothing to flip
+                new_files = None
+                if touched:
+                    out = updated if when_matched == "update" else ins
+                    if insert and out is not ins:
+                        out = out.unionByName(ins)
+                    new_files = self._stage_rewrite(
+                        out, len(touched), self.order_col
+                    )
+                positions = hits.select("__fname", "__pos")
+                if when_matched == "ignore":
+                    positions = positions.limit(0)
+                props.update(read_set)
+                return self._commit_dv(
+                    base_id, base_raw, base_bb, cand, positions, props,
+                    extra_files=new_files, operation=operation,
+                )
             if not touched:
                 return base_id  # candidates held no actual match
             in_touched = F.col("__bucket").isin(touched)
-            if assignments:
-                out = cur.filter(in_touched).withColumns(
+            out = cur.filter(
+                in_touched & miss if when_matched == "delete" else in_touched
+            )
+            if when_matched == "update":
+                out = out.withColumns(
                     {
                         col: F.when(F.col("__hit"), e).otherwise(F.col(col))
                         for col, e in sets.items()
                     }
                 )
-            else:
-                out = cur.filter(in_touched & miss)
-            new_files = self._stage_rewrite(
-                out.drop(*drop), len(touched), self.order_col
-            )
+            out = out.drop(*drop)
+            if insert:
+                out = out.unionByName(ins.filter(in_touched))
+            new_files = self._stage_rewrite(out, len(touched), self.order_col)
         finally:
             for df in reversed(pinned):
                 df.unpersist()
@@ -2400,9 +2489,8 @@ class SnapshotTable:
         ``update_where`` or ``merge_into``) are fresh staged entries
         appended into their buckets IN THE SAME commit as the dv
         flips — atomicity is the manifest claim, exactly as for every
-        other verb. Both callers (the row-level DML verbs and
-        :meth:`merge_into`) record their read set, so a lost claim may
-        rebase."""
+        other verb. Its one caller, :meth:`_dml_once`, records every
+        row-level verb's read set, so a lost claim may rebase."""
         import shutil
 
         counts = {
@@ -2643,8 +2731,8 @@ class SnapshotTable:
         return self._retry(
             "update_where",
             lambda: self._dml_once(
-                properties, audit, mode == "mor",
-                predicate=predicate, assignments=assignments,
+                properties, audit, mode == "mor", predicate=predicate,
+                when_matched="update", assignments=assignments,
             ),
             max_retries,
         )
@@ -2741,7 +2829,17 @@ class SnapshotTable:
         the inserts append as new files, ONE commit — I/O is
         O(source-affected rows), never O(touched files). The daily
         upsert batch against a 100-TB fact table stops rewriting the
-        buckets it grazes."""
+        buckets it grazes.
+
+        The clauses map onto the pipeline every row-level verb runs
+        (:meth:`_dml_once`): the source keys' layout hash is the
+        prune; the NULL-safe key match, ``AND matched_condition``, is
+        the hit; ``when_matched`` is the matched action — delete, the
+        ``UPDATE SET *`` assignment of every column from its source
+        row, or none — and ``when_not_matched="insert"`` adds the
+        source rows whose key no candidate row holds. The effect is
+        the same copy-on-write rewrite or deletion-vector commit
+        :meth:`delete_keys` and :meth:`update_where` use."""
         if mode not in ("cow", "mor"):
             raise ValueError(
                 f"merge_into: mode must be 'cow' or 'mor', got {mode!r}"
@@ -2756,262 +2854,31 @@ class SnapshotTable:
                 f"merge_into: when_not_matched={when_not_matched!r} "
                 "not in ('insert', 'ignore')"
             )
-        return self._retry(
-            "merge_into",
-            lambda: self._merge_into_once(
-                source, when_matched, matched_condition,
-                when_not_matched, properties, mor=(mode == "mor"),
-            ),
-            max_retries,
-        )
-
-    def _merge_into_once(
-        self,
-        source: DataFrame,
-        when_matched: str,
-        matched_condition: str | None,
-        when_not_matched: str,
-        properties: dict | None,
-        mor: bool = False,
-    ) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
+        if self.current_id() is None:
             raise ValueError(
                 f"snapshot table {self.table_dir}: no commits — "
                 "bootstrap with append()/merge(), then MERGE INTO"
             )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        schema = self._schema_of(base_raw)
-        missing = [c for c in schema.names if c not in source.columns]
-        if missing:
-            raise ValueError(
-                f"merge_into: source is missing table columns "
-                f"{missing} (full rows required — see docstring)"
-            )
-        # align to the table schema (types cast — the type-sensitive
-        # hash lesson) and pin: the source feeds the cardinality
-        # check, the bucket-target collect, the match join, and the
-        # insert anti-join
-        src = source.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            dup = (
-                src.groupBy(*self.key_cols)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    "merge_into: source has duplicate keys — SQL "
-                    "MERGE requires at most one source row per "
-                    "target key"
-                )
-            target = self._buckets_of(self._with_bucket(src))
-            cand = {
-                b: self._entries(base_bb[b])
-                for b in target
-                if self._loc_n(base_bb.get(b, []))
-            }
-            cand_ents = [f for fs in cand.values() for f in fs]
-            base_rows = self._with_bucket(
-                self._read_entries(
-                    cand_ents, schema, spark=source.sparkSession,
-                    keep_meta=mor,
-                )
-            )
-            s_pref = src.select(
-                *[F.col(c).alias(f"__s_{c}") for c in schema.names],
-                F.lit(True).alias("__s_present"),
-            )
-            joined = base_rows.join(
-                s_pref, self._null_safe_keys("__s_"), "left"
-            )
-            if matched_condition is not None:
-                # The condition resolves against a frame exposing
-                # ONLY the t_/s_ prefixed names — the original row is
-                # packed into a struct first, so a table that itself
-                # has a column named t_x/s_x can never make the
-                # documented prefix syntax ambiguous (review r12).
-                cview = joined.select(
-                    F.struct(*joined.columns).alias("__row"),
-                    *[
-                        F.col(c).alias(f"t_{c}")
-                        for c in schema.names
-                    ],
-                    *[
-                        F.col(f"__s_{c}").alias(f"s_{c}")
-                        for c in schema.names
-                    ],
-                )
-                fired = F.coalesce(
-                    F.expr(matched_condition), F.lit(False)
-                )
-                joined = cview.withColumn(
-                    "__act",
-                    F.coalesce(F.col("__row.__s_present"), F.lit(False))
-                    & fired,
-                ).select("__row.*", "__act")
-            else:
-                joined = joined.withColumn(
-                    "__act",
-                    F.coalesce(F.col("__s_present"), F.lit(False)),
-                )
-            joined = joined.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                if when_matched == "ignore":
-                    # matched rows pass through untouched — a match
-                    # alone must not force a bucket rewrite
-                    act_buckets: set = set()
-                else:
-                    act_buckets = set(
-                        self._buckets_of(joined.filter("__act"))
-                    )
-                if when_not_matched == "insert":
-                    inserts = src.join(
-                        joined.select(
-                            *[
-                                F.col(k).alias(f"__b_{k}")
-                                for k in self.key_cols
-                            ]
-                        ).dropDuplicates(),
-                        self._null_safe_keys("__b_"),
-                        "left_anti",
-                    ).persist(StorageLevel.MEMORY_AND_DISK)
-                    ins_buckets = set(
-                        self._buckets_of(self._with_bucket(inserts))
-                    )
-                else:
-                    inserts = None
-                    ins_buckets = set()
-                touched = sorted(act_buckets | ins_buckets)
-                if not touched:
-                    return base_id  # nothing fired anywhere — no-op
-                if mor:
-                    # deletion-vector MERGE: fired matched rows are
-                    # position deletes; replacements + inserts append
-                    # as new files; ONE commit carries both
-                    to_stage = None
-                    if when_matched == "update":
-                        to_stage = joined.filter("__act").select(
-                            "__bucket",
-                            *[
-                                F.col(f"__s_{c}").alias(c)
-                                for c in schema.names
-                            ],
-                        )
-                    if inserts is not None:
-                        ins_b = self._with_bucket(inserts)
-                        to_stage = (
-                            ins_b
-                            if to_stage is None
-                            else to_stage.unionByName(ins_b)
-                        )
-                    stage_buckets = sorted(
-                        (
-                            act_buckets
-                            if when_matched == "update"
-                            else set()
-                        )
-                        | ins_buckets
-                    )
-                    new_files = (
-                        self._stage_rewrite(
-                            to_stage, len(stage_buckets), self.order_col
-                        )
-                        if to_stage is not None and stage_buckets
-                        else []
-                    )
-                    if when_matched == "ignore":
-                        positions = source.sparkSession.createDataFrame(
-                            [], "__fname string, __pos long"
-                        )
-                    else:
-                        positions = joined.filter("__act").select(
-                            "__fname", "__pos"
-                        )
-                    props = dict(properties or {})
-                    props.setdefault(
-                        "merge_into.when_matched", when_matched
-                    )
-                    props.setdefault(
-                        "merge_into.when_not_matched", when_not_matched
-                    )
-                    props.setdefault("merge_into.mode", "mor")
-                    # every source key's bucket, matched or not — the
-                    # rebase overlap check validates reads too
-                    # (write-skew guard)
-                    props["read.buckets"] = [int(b) for b in target]
-                    if matched_condition is not None:
-                        props.setdefault(
-                            "merge_into.matched_condition",
-                            matched_condition,
-                        )
-                    return self._commit_dv(
-                        base_id, base_raw, base_bb, cand, positions,
-                        props, extra_files=new_files,
-                        operation="merge_into",
-                    )
-                if when_matched == "update":
-                    kept = joined.select(
-                        "__bucket",
-                        *[
-                            F.when(
-                                F.col("__act"), F.col(f"__s_{c}")
-                            )
-                            .otherwise(F.col(c))
-                            .alias(c)
-                            for c in schema.names
-                        ],
-                    )
-                elif when_matched == "delete":
-                    kept = joined.filter(~F.col("__act")).select(
-                        "__bucket", *schema.names
-                    )
-                else:  # ignore — matched rows pass through untouched
-                    kept = joined.select("__bucket", *schema.names)
-                rows = kept.filter(F.col("__bucket").isin(touched))
-                if inserts is not None:
-                    rows = rows.unionByName(
-                        self._with_bucket(inserts).filter(
-                            F.col("__bucket").isin(touched)
-                        )
-                    )
-                new_files = self._stage_rewrite(
-                    rows, len(touched), self.order_col
-                )
-            finally:
-                joined.unpersist()
-                if inserts is not None:
-                    inserts.unpersist()
-        finally:
-            src.unpersist()
-        props = dict(properties or {})
-        props.setdefault("merge_into.when_matched", when_matched)
-        props.setdefault("merge_into.when_not_matched", when_not_matched)
+        audit = {
+            "merge_into.when_matched": when_matched,
+            "merge_into.when_not_matched": when_not_matched,
+        }
+        if mode == "mor":
+            audit["merge_into.mode"] = "mor"
+            # holds its place only: merge-on-read manifests have always
+            # listed the read set before the condition
+            audit["read.buckets"] = None
         if matched_condition is not None:
-            props.setdefault(
-                "merge_into.matched_condition", matched_condition
-            )
-        # every source key's bucket, matched or not — the rebase
-        # overlap check validates reads too (write-skew guard)
-        props["read.buckets"] = [int(b) for b in target]
-        return self._claim_or_rebase(
-            self._build_delta(
-                base_raw["schema"], base_bb, {b: [] for b in touched},
-                operation="merge_into", base_id=base_id, properties=props,
-                new_files=new_files,
+            audit["merge_into.matched_condition"] = matched_condition
+        return self._retry(
+            "merge_into",
+            lambda: self._dml_once(
+                properties, audit, mode == "mor", source=source,
+                matched_condition=matched_condition,
+                when_matched=when_matched,
+                when_not_matched=when_not_matched,
             ),
-            rebase_ok=True,
+            max_retries,
         )
 
     def _null_safe_keys(self, pref: str):
@@ -4406,13 +4273,27 @@ class SnapshotTable:
                 # tracking (ids in declaration order) in this commit
                 schema_json = self._stamp_fids_json(schema_json)
             st = T.StructType.fromJson(json.loads(schema_json))
-            return self._claim_or_rebase(
-                self._build_delta(
-                    fn(st, base_raw).json(), self._by_bucket(base_id), {},
-                    operation="evolve", base_id=base_id,
-                    properties={"evolve.op": label},
-                )
+            # a lost claim must leave the handle's config as it was:
+            # the re-plan's _adopt_layout refuses a handle whose key or
+            # order names the table does not have yet
+            config = (
+                self.key_cols, self.order_col, self.bucket_cols,
+                self.bloom_cols,
             )
+            try:
+                return self._claim_or_rebase(
+                    self._build_delta(
+                        fn(st, base_raw).json(), self._by_bucket(base_id),
+                        {}, operation="evolve", base_id=base_id,
+                        properties={"evolve.op": label},
+                    )
+                )
+            except CommitConflict:
+                (
+                    self.key_cols, self.order_col, self.bucket_cols,
+                    self.bloom_cols,
+                ) = config
+                raise
 
         return self._retry(f"{label}:", once, max_retries)
 
