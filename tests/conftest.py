@@ -63,6 +63,28 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def registered_query(spark, sf_dir):
+    """``name -> DataFrame``: a registered query built on the fixture
+    dir, ONCE for its two whole-registry checks (the oracle comparison
+    and the no-row-wise-UDF plan check). Many builders write and
+    commit tables before they return a frame, so a second build costs
+    as much as the first. The first caller builds and holds the frame;
+    the second takes it, so the frame is released once both ran."""
+    from turnover_odata_etl_spark.plans import registry
+
+    specs = registry.all_specs()
+    held: dict = {}
+
+    def get(name: str):
+        if name in held:
+            return held.pop(name)
+        held[name] = df = specs[name].fn(spark, sf_dir)
+        return df
+
+    return get
+
+
 @pytest.fixture()
 def parquet_spy(spark, monkeypatch):
     """Record every parquet path spark.read.parquet opens — the

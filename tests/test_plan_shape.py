@@ -80,11 +80,13 @@ def test_sessionize_single_shuffle(spark, sf_dir):
     "name",
     sorted(n for n, s in SPECS.items() if "streaming" not in s.tags),
 )
-def test_no_rowwise_python_udf_anywhere(name, spark, sf_dir):
+def test_no_rowwise_python_udf_anywhere(name, registered_query):
     """BatchEvalPython = row-at-a-time Python UDF — banned on every
     data path (SCALE.md). Arrow paths (ArrowEvalPython, MapInPandas,
-    FlatMapGroupsInPandas) are the sanctioned Python escape hatches."""
-    plan = plan_str(SPECS[name].fn(spark, sf_dir), mode="simple")
+    FlatMapGroupsInPandas) are the sanctioned Python escape hatches.
+    The frame is the one the oracle comparison checks: a row-wise UDF
+    node stays in the physical plan before and after execution."""
+    plan = plan_str(registered_query(name), mode="simple")
     assert "BatchEvalPython" not in plan
 
 
