@@ -65,13 +65,19 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def registered_query(spark, sf_dir):
-    """``name -> DataFrame``: a registered query built on the fixture
-    dir, ONCE for its two whole-registry checks (the oracle comparison
-    and the no-row-wise-UDF plan check). Many builders write and
-    commit tables before they return a frame, so a second build costs
-    as much as the first. The first caller builds and holds the frame;
-    the second takes it, so the frame is released once both ran."""
+    """``name -> (DataFrame, plan)``: a registered query built on the
+    fixture dir ONCE for its two whole-registry checks (the oracle
+    comparison and the no-row-wise-UDF plan check). Many builders
+    write and commit tables before they return a frame, so a second
+    build costs as much as the first. ``plan`` is the simple explain
+    taken right after the build, before any action: once the frame has
+    run, AQE's final plan may swap a branch that came out empty for an
+    empty scan and drop the nodes the plan check looks for. The first
+    caller builds and holds the pair; the second takes it. Streaming
+    queries are not held: the plan check skips them."""
     from turnover_odata_etl_spark.plans import registry
+
+    from .test_plan_shape import plan_str
 
     specs = registry.all_specs()
     held: dict = {}
@@ -79,8 +85,11 @@ def registered_query(spark, sf_dir):
     def get(name: str):
         if name in held:
             return held.pop(name)
-        held[name] = df = specs[name].fn(spark, sf_dir)
-        return df
+        df = specs[name].fn(spark, sf_dir)
+        if "streaming" in specs[name].tags:
+            return df, None
+        held[name] = built = (df, plan_str(df, mode="simple"))
+        return built
 
     return get
 

@@ -18,7 +18,7 @@ SPECS = registry.all_specs()
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_matches_oracle(name, oracle_con, registered_query):
     spec = SPECS[name]
-    sdf = registered_query(name)
+    sdf, _ = registered_query(name)
     if spec.oracle is None:
         # rows-only check (driver does the same for oracle-less queries)
         assert sdf.count() >= 0

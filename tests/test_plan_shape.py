@@ -84,9 +84,9 @@ def test_no_rowwise_python_udf_anywhere(name, registered_query):
     """BatchEvalPython = row-at-a-time Python UDF — banned on every
     data path (SCALE.md). Arrow paths (ArrowEvalPython, MapInPandas,
     FlatMapGroupsInPandas) are the sanctioned Python escape hatches.
-    The frame is the one the oracle comparison checks: a row-wise UDF
-    node stays in the physical plan before and after execution."""
-    plan = plan_str(registered_query(name), mode="simple")
+    The plan is the one explained when the frame was built, before the
+    oracle comparison runs it."""
+    _, plan = registered_query(name)
     assert "BatchEvalPython" not in plan
 
 

@@ -401,6 +401,28 @@ def test_rename_of_the_order_column_replans_after_a_lost_cas(
     assert _rows(mk(spark, tdir)) == {(kA, 1), (kB, 1)}
 
 
+def test_rename_that_fails_to_write_its_manifest_keeps_the_handle(
+    spark, tmp_path, monkeypatch
+):
+    """A rename whose manifest write raises commits nothing and leaves
+    the handle's order column as it was, so the handle's next write
+    still adopts the table's layout."""
+    _, kA, _, kB, _ = _keys(spark)
+    t = mk(spark, str(tmp_path / "tbl"))
+    t.append(batch(spark, [(kA, 1)]))
+
+    def full_disk(self, manifest):
+        raise OSError("no space left on device")
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotTable, "_write_manifest_tmp", full_disk)
+        with pytest.raises(OSError, match="no space"):
+            t.rename_column("ver", "version")
+    assert t.order_col == "ver"
+    assert t.append(batch(spark, [(kB, 1)])) == 2
+    assert _rows(t) == {(kA, 1), (kB, 1)}
+
+
 def _calls_by_function(path, match):
     """{enclosing function name} of every call node ``match`` accepts."""
     tree = ast.parse(open(path).read())

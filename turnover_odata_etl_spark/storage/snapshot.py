@@ -4273,9 +4273,12 @@ class SnapshotTable:
                 # tracking (ids in declaration order) in this commit
                 schema_json = self._stamp_fids_json(schema_json)
             st = T.StructType.fromJson(json.loads(schema_json))
-            # a lost claim must leave the handle's config as it was:
-            # the re-plan's _adopt_layout refuses a handle whose key or
-            # order names the table does not have yet
+            # an attempt that raises — a lost claim, a failed manifest
+            # write — must leave the handle's config as it was: the
+            # next _adopt_layout refuses a handle whose key or order
+            # names the table does not have. The old names stay safe
+            # even if the claim did land: they resolve through the
+            # rename lineage.
             config = (
                 self.key_cols, self.order_col, self.bucket_cols,
                 self.bloom_cols,
@@ -4288,7 +4291,7 @@ class SnapshotTable:
                         properties={"evolve.op": label},
                     )
                 )
-            except CommitConflict:
+            except BaseException:
                 (
                     self.key_cols, self.order_col, self.bucket_cols,
                     self.bloom_cols,
