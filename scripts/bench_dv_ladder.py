@@ -1,14 +1,16 @@
 """DV read-tax scale ladder (round 15 — VERDICT r14 item 7).
 
-The merge-on-read read path costs ONE broadcast anti-join on the
-native (file_name, row_index) pair; round 14 measured it only at
-1-row deletes. This script measures what a 100-TB operator needs to
-set ``maintenance_plan(max_delete_ratio)``: full-scan aggregate wall
-against UN-COMPACTED position counts of 0 / 10^3 / 10^5 / 10^6 /
-2.2x10^6 (the last crosses ``DV_BROADCAST_MAX`` = 2x10^6, where the
-read drops the broadcast hint and lets AQE pick the join), the
-per-rung MOR delete wall + dv sidecar bytes, and the post-``compact``
-recovery wall.
+A merge-on-read read drops deleted positions in one of two regimes
+(``SnapshotTable._read_entries``): at or under ``DV_DRIVER_MAX``
+un-compacted positions the driver reads the sidecars and the scan
+applies one InSet filter; above it Spark reads the sidecars and the
+scan anti-joins them (broadcast up to ``DV_BROADCAST_MAX`` = 2x10^6,
+AQE's choice past it). This script measures full-scan aggregate wall
+against UN-COMPACTED position counts of 0 / 10^3 / 3x10^3 / 5x10^3 /
+10^4 / 3x10^4 / 10^5 / 10^6 / 2.2x10^6 in the default regime and, up to
+10^5, with each regime forced — the crossover that sets
+``DV_DRIVER_MAX`` — plus the per-rung MOR delete wall + dv sidecar
+bytes and the post-``compact`` recovery wall.
 
 Corpus: events at $SPARK_GRAFT_SF_DIR replicated 50x with shifted ids
 (5M rows at sf0.1) — big enough that the rung deltas are join tax,
@@ -31,22 +33,34 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from turnover_odata_etl_spark.session import get_spark  # noqa: E402
 from turnover_odata_etl_spark.storage import SnapshotTable  # noqa: E402
+from turnover_odata_etl_spark.storage import snapshot  # noqa: E402
 from turnover_odata_etl_spark.tables import load_table  # noqa: E402
 
 REPLICAS = 50
-RUNGS = [1_000, 100_000, 1_000_000, 2_200_000]  # cumulative positions
+RUNGS = [  # cumulative positions
+    1_000, 3_000, 5_000, 10_000, 30_000, 100_000, 1_000_000, 2_200_000
+]
+FORCED_MAX = 100_000  # both regimes forced up to here
 REPS = 3
 
 
-def read_wall(t: SnapshotTable) -> float:
-    best = float("inf")
-    for _ in range(REPS):
-        t0 = time.perf_counter()
-        t.read().agg(
-            F.count(F.lit(1)), F.sum("value")
-        ).collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+def read_wall(t: SnapshotTable, cap: int | None = None) -> float:
+    """Min-of-REPS full-scan aggregate wall; ``cap`` overrides
+    ``DV_DRIVER_MAX`` for the measurement (0 forces the Spark join,
+    a cap above the positions forces the driver filter)."""
+    default = snapshot.DV_DRIVER_MAX
+    snapshot.DV_DRIVER_MAX = default if cap is None else cap
+    try:
+        best = float("inf")
+        for _ in range(REPS):
+            t0 = time.perf_counter()
+            t.read().agg(
+                F.count(F.lit(1)), F.sum("value")
+            ).collect()
+            best = min(best, time.perf_counter() - t0)
+        return round(best, 3)
+    finally:
+        snapshot.DV_DRIVER_MAX = default
 
 
 def dv_bytes(table_dir: str) -> int:
@@ -116,8 +130,15 @@ def main() -> None:
             "read_s": read_wall(t),
             "delete_s": d,
             "dv_bytes": dv_bytes(table_dir) - b0,
-            "broadcast": done <= 2_000_000,
+            "regime": (
+                "driver" if done <= snapshot.DV_DRIVER_MAX
+                else "broadcast" if done <= snapshot.DV_BROADCAST_MAX
+                else "aqe"
+            ),
         }
+        if done <= FORCED_MAX:
+            rung["read_driver_s"] = read_wall(t, cap=done)
+            rung["read_join_s"] = read_wall(t, cap=0)
         out.append(rung)
         print(json.dumps(rung), flush=True)
 

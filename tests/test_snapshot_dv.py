@@ -23,18 +23,28 @@ breaks if the mechanism is faked:
 from __future__ import annotations
 
 import os
+import uuid
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from turnover_odata_etl_spark.storage import SnapshotTable
+from turnover_odata_etl_spark.storage import snapshot as snapshot_mod
 from turnover_odata_etl_spark.storage.snapshot import DV_CHAIN_MAX
 
 
 @pytest.fixture()
 def tdir(tmp_path):
     return str(tmp_path / "dvtable")
+
+
+@pytest.fixture()
+def over_cap(monkeypatch):
+    """Force the over-cap regime: every dv-carrying read resolves its
+    positions with the Spark-side sidecar scan and join instead of
+    the driver-built InSet filter."""
+    monkeypatch.setattr(snapshot_mod, "DV_DRIVER_MAX", 0)
 
 
 def make_table(spark, tdir, n_buckets=4, **kw):
@@ -150,6 +160,12 @@ def test_mor_matches_cow_on_every_read_path(spark, tmp_path):
     assert rows(
         t_cow.read_matching(probe).join(probe, "k", "left_semi")
     ) == rows(t_mor.read_matching(probe).join(probe, "k", "left_semi"))
+
+
+def test_mor_matches_cow_on_every_read_path_over_cap(
+    spark, tmp_path, over_cap
+):
+    test_mor_matches_cow_on_every_read_path(spark, tmp_path)
 
 
 def test_null_predicate_rows_survive_mor(spark, tdir):
@@ -301,6 +317,93 @@ def test_time_travel_across_mor_deletes(spark, tdir):
     assert t.read(s1).count() == 30
     assert t.read(s2).count() == 20
     assert t.read().count() == 10
+
+
+def test_time_travel_across_mor_deletes_over_cap(spark, tdir, over_cap):
+    test_time_travel_across_mor_deletes(spark, tdir)
+
+
+def test_sidecar_positions_apply_only_to_referencing_entries(
+    spark, tdir, monkeypatch
+):
+    """One delete commit writes ONE sidecar for every file it hits, so
+    a later sidecar can hold positions for a file whose entry, as of
+    an earlier snapshot, does not reference it. Reading that entry
+    beside one that does reference the sidecar must apply the
+    sidecar's positions to the referencing file only — in both
+    regimes."""
+    t = make_table(spark, tdir, n_buckets=1)
+    seed(spark, t, n=20)
+    first = set(data_paths(t))
+    t.append(
+        spark.range(20, 40).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 10).alias("v"),
+            F.lit(1).cast("long").alias("ver"),
+        )
+    )
+    t.delete_where("k = 1", mode="mor")
+    s1 = t._manifest(t.current_id())
+    t.delete_where("k = 2 OR k = 22", mode="mor")  # one sidecar, both
+    s2 = t._manifest(t.current_id())
+    entries = [f for f in s1["files"] if f["path"] in first] + [
+        f for f in s2["files"] if f["path"] not in first
+    ]
+
+    def refs(files):
+        return {
+            sc for f in files
+            for sc in (f.get("dv") or {}).get("sidecars", ())
+        }
+
+    (later,) = refs(entries) - refs(s1["files"])
+    held = set(pq.read_table(os.path.join(tdir, later))["fname"].to_pylist())
+    assert held & {os.path.basename(p) for p in first}  # the trap is set
+    want = sorted(set(range(40)) - {1, 22})
+    for cap in (snapshot_mod.DV_DRIVER_MAX, 0):
+        monkeypatch.setattr(snapshot_mod, "DV_DRIVER_MAX", cap)
+        got = t._read_entries(entries, t._schema_of(s2))
+        assert sorted(r["k"] for r in got.collect()) == want, cap
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"dv-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dv_reads_run_one_job_under_the_cap(spark, tdir, monkeypatch):
+    """Under ``DV_DRIVER_MAX`` the positions are resolved on the driver
+    and dropped inside the scan's own job: a plain read, a pruned read,
+    time travel and a dv-only ``changes`` each run exactly ONE Spark
+    job, as a read of a table without vectors does. Over the cap the
+    sidecar scan is the one extra job."""
+    t = make_table(spark, tdir)
+    seed(spark, t, n=60)
+    s1 = t.current_id()
+    assert _jobs(spark, lambda: t.read().collect()) == 1
+    t.delete_where("k < 10", mode="mor")
+    s2 = t.current_id()
+    t.delete_where("k BETWEEN 30 AND 35", mode="mor")
+    assert _jobs(spark, lambda: t.read().collect()) == 1
+    assert _jobs(spark, lambda: t.read_where("k", 0, 40).collect()) == 1
+    assert _jobs(spark, lambda: t.read(s2).collect()) == 1
+    assert _jobs(spark, lambda: t.changes(s2).collect()) == 1
+    assert rows(t.read()) == [
+        (k, k * 10) for k in range(10, 60) if not 30 <= k <= 35
+    ]
+    assert sorted(r["k"] for r in t.changes(s1, s2).collect()) == list(
+        range(10)
+    )
+    monkeypatch.setattr(snapshot_mod, "DV_DRIVER_MAX", 0)
+    assert _jobs(spark, lambda: t.read().collect()) == 2
 
 
 def test_changes_sees_mor_delete(spark, tdir):
@@ -565,9 +668,9 @@ def test_mor_merge_into_pure_insert_writes_no_sidecar(spark, tdir):
 
 
 def test_changes_dv_fast_path_plan_shape(spark, tdir):
-    """A dv-only diff must take the fast path: pre-image deletes via
-    a broadcast position semi-join — NO full-outer join of bucket
-    states in the plan. A rewrite diff keeps the join path."""
+    """A dv-only diff must take the fast path: pre-image deletes from
+    one scan kept to the delta positions — NO full-outer join of
+    bucket states in the plan. A rewrite diff keeps the join path."""
     t = make_table(spark, tdir)
     seed(spark, t, n=30)
     s1 = t.current_id()
@@ -622,6 +725,12 @@ def test_changes_dv_fast_path_excludes_prior_dv(spark, tdir):
     t.delete_where("k = 2", mode="mor")
     got = [(r["k"], r["_change_type"]) for r in t.changes(s_mid).collect()]
     assert got == [(2, "delete")]
+
+
+def test_changes_dv_fast_path_excludes_prior_dv_over_cap(
+    spark, tdir, over_cap
+):
+    test_changes_dv_fast_path_excludes_prior_dv(spark, tdir)
 
 
 def test_changes_reversed_window_falls_back_to_join(spark, tdir):

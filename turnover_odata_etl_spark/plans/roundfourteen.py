@@ -10,8 +10,8 @@ r13 item 2 / SURVEY E121, ``SnapshotTable.delete_where(mode="mor")``
 / ``delete_keys(mode="mor")``): the Iceberg v2 positional-delete /
 Delta deletion-vector capability. A MOR delete writes O(matched
 rows) of (file, position) pairs to ONE sidecar parquet and re-points
-manifest entries — data files are NEVER rewritten; readers anti-join
-the positions back out; compaction folds them into data files. The
+manifest entries — data files are NEVER rewritten; readers skip
+those positions; compaction folds them into data files. The
 lifecycle query bootstraps events as three id-sliced appends, runs a
 predicate MOR delete (the value window) and a keyed MOR delete
 (every seventh id — the GDPR batch shape), then returns the
@@ -112,9 +112,10 @@ def s_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's survivor count).
 
     Plan shape: the MOR deletes write O(matched positions); each
-    read is one scan + one broadcast anti-join on the native
-    ``(_metadata.file_name, _metadata.row_index)`` pair — no
-    shuffle, no Python. At 100 TB this is the weekly GDPR batch
+    read is one scan that drops the positions with one InSet filter
+    on the native ``(_metadata.file_name, _metadata.row_index)``
+    pair, resolved on the driver — one Spark job, no shuffle, no
+    Python. At 100 TB this is the weekly GDPR batch
     deleting kilobytes instead of rewriting terabytes."""
     import os
     import shutil

@@ -60,7 +60,7 @@ import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,11 +113,23 @@ _BLOOM_MAX_BITS = 65536
 # public capability is Iceberg v2 positional delete files / Delta
 # deletion vectors): a MOR delete writes O(matched rows) of (file,
 # position) pairs to a sidecar parquet and flips manifest entries to
-# reference it — it never rewrites data files. Readers anti-join the
-# referenced positions back out; compaction / COW rewrites fold them
-# into data files and drop the reference.
+# reference it — it never rewrites data files. Readers drop the
+# referenced positions (`_read_entries`); compaction / COW rewrites
+# fold them into data files and drop the reference.
 DV_CHAIN_MAX = 4  # sidecar refs per file before the write-side fold
 DV_BROADCAST_MAX = 2_000_000  # positions; above this AQE decides
+# positions; at or under this a read resolves its vectors on the driver
+# (pyarrow sidecar reads, one InSet filter in the scan's own job), above
+# it Spark reads the sidecars and joins — see SCALE.md's DV ladder
+DV_DRIVER_MAX = 5_000
+# Catalyst keeps an IN list of at most this many values as an `In`
+# (spark.sql.optimizer.inSetConversionThreshold's default), whose
+# generated code grows with the list; position filters are padded past
+# it with keys no row has, so every one plans as a reference-object
+# InSet and compiles to the same code
+_INSET_MIN = 11
+# the (file, position) key those filters test
+_POS_KEY = "concat(__fname, '/', CAST(__pos AS STRING))"
 
 
 def _bloom_nbits(rows: int) -> int:
@@ -548,7 +560,7 @@ class SnapshotTable:
         A bucket also qualifies when its merge-on-read delete ratio
         (deletion-vector rows over physical rows) exceeds
         ``max_delete_ratio`` (round 14): reads there pay the position
-        anti-join for mostly-dead bytes, so the bucket is due a
+        filter for mostly-dead bytes, so the bucket is due a
         :meth:`compact` fold.
 
         On a 100-TB table this is the nightly job's first query: scan
@@ -974,41 +986,86 @@ class SnapshotTable:
 
     # ------------------------------------ merge-on-read deletion vectors
 
+    @staticmethod
+    def _dv_refs(entries: list[dict]) -> dict[str, set[str]]:
+        """Sidecar basename → basenames of the data files whose
+        entries reference it. Only these (file, sidecar) pairs count,
+        and that matters for time travel: a sidecar written by a later
+        delete may hold positions for a file whose entry at THIS
+        snapshot does not reference it yet, so filtering by file name
+        alone would delete from the past."""
+        refs: dict[str, set[str]] = {}
+        for f in entries:
+            for sc in (f.get("dv") or {}).get("sidecars", ()):
+                refs.setdefault(os.path.basename(sc), set()).add(
+                    os.path.basename(f["path"])
+                )
+        return refs
+
+    @staticmethod
+    def _in_set(key_sql: str, keys) -> Column:
+        """``key_sql IN keys`` as ONE parsed SQL expression: one JVM
+        call however many keys (``Column.isin`` makes one per value).
+        Padded to ``_INSET_MIN`` with keys no row has (real keys start
+        with a file name, these with ``/``), so Catalyst always plans a
+        hash-set ``InSet`` held as a reference object — the generated
+        code does not change from one set to the next."""
+        lits = [
+            "'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            for k in sorted(keys)
+        ]
+        lits += [f"'/-{i}'" for i in range(1, _INSET_MIN + 1 - len(lits))]
+        return F.expr(f"{key_sql} IN ({', '.join(lits)})")
+
+    def _dv_keys(self, entries: list[dict]) -> set[str]:
+        """Deleted positions of dv-carrying entries as ``fname/pos``
+        keys, read on the DRIVER with pyarrow — the under-cap regime
+        (``DV_DRIVER_MAX``): no Spark job, O(referenced sidecar rows)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        keys: set[str] = set()
+        for sc, fnames in self._dv_refs(entries).items():
+            tbl = pq.read_table(
+                os.path.join(self._data_dir, sc), columns=["fname", "pos"]
+            )
+            tbl = tbl.filter(
+                pc.is_in(tbl["fname"], value_set=pa.array(sorted(fnames)))
+            )
+            keys.update(
+                pc.binary_join_element_wise(
+                    tbl["fname"], pc.cast(tbl["pos"], pa.string()), "/"
+                ).to_pylist()
+            )
+        return keys
+
     def _dv_pairs(self, entries: list[dict], spark=None) -> DataFrame:
-        """Deleted-position frame ``(__fname, __pos)`` for the given
-        dv-carrying manifest entries: the union of their position
-        sidecars, restricted to exactly the (file, sidecar) pairs the
-        entries reference. The pairing matters for time travel — a
-        sidecar written by a later delete may hold positions for a
-        file whose entry at THIS snapshot does not reference it yet,
-        so filtering by file name alone would delete from the past.
-        O(referenced sidecar rows) — the not-yet-compacted deleted
-        positions, never the data files."""
+        """Deleted-position frame ``(__fname, __pos)`` for dv-carrying
+        entries, read by SPARK — the over-cap regime and the write-side
+        chain fold. One scan of the referenced sidecars with an
+        explicit schema (no inference job), kept to exactly the (file,
+        sidecar) pairs of :meth:`_dv_refs` by a filter on the scan's own
+        ``_metadata.file_name``. O(referenced sidecar rows) — the
+        not-yet-compacted deleted positions, never the data files."""
         spark = spark or self.spark
-        refs = sorted(
-            {
-                (os.path.basename(f["path"]), os.path.basename(sc))
-                for f in entries
-                for sc in (f.get("dv") or {}).get("sidecars", ())
-            }
+        refs = self._dv_refs(entries)
+        return (
+            spark.read.schema("fname string, pos long")
+            .parquet(*[os.path.join(self._data_dir, sc) for sc in sorted(refs)])
+            .select(
+                F.col("fname").alias("__fname"),
+                F.col("pos").alias("__pos"),
+                F.col("_metadata.file_name").alias("__sc"),
+            )
+            .filter(
+                self._in_set(
+                    "concat(__sc, '/', __fname)",
+                    {f"{sc}/{fn}" for sc, fns in refs.items() for fn in fns},
+                )
+            )
+            .select("__fname", "__pos")
         )
-        sidecars = sorted({sc for _, sc in refs})
-        raw = spark.read.parquet(
-            *[
-                os.path.join(self.table_dir, "data", sc)
-                for sc in sidecars
-            ]
-        ).select(
-            F.col("fname").alias("__fname"),
-            F.col("pos").alias("__pos"),
-            F.col("_metadata.file_name").alias("__sc"),
-        )
-        ref_df = spark.createDataFrame(
-            refs, "__fname string, __sc string"
-        )
-        return raw.join(
-            F.broadcast(ref_df), ["__fname", "__sc"], "left_semi"
-        ).select("__fname", "__pos")
 
     def _read_entries(
         self,
@@ -1019,24 +1076,31 @@ class SnapshotTable:
     ) -> DataFrame:
         """DV-aware aligned read of manifest entries — the merge-on-
         read half of deletion vectors (round 14; the public pattern is
-        Iceberg v2 positional delete files / Delta deletion vectors,
-        re-expressed Spark-first as ONE broadcast anti-join on
-        ``(_metadata.file_name, _metadata.row_index)`` — both native
-        metadata columns, so position derivation costs no shuffle and
-        no Python). Entries without a ``dv`` take the plain
-        :meth:`_aligned_read` path UNCHANGED — dv-less tables (every
-        pre-r14 table) keep byte-identical plans.
+        Iceberg v2 positional delete files / Delta deletion vectors).
+        Deleted positions are matched on ``(_metadata.file_name,
+        _metadata.row_index)`` — both native metadata columns, so
+        position derivation costs no shuffle and no Python. Entries
+        without a ``dv`` take the plain :meth:`_aligned_read` path
+        UNCHANGED — dv-less tables keep byte-identical plans.
 
         ``keep_meta=True`` retains ``__fname``/``__pos`` for callers
         that group per file (the agg_stats fallback scan) or write
         position sidecars (the MOR delete verbs).
 
-        Scale note: the deleted-position frame is broadcast only while
-        its manifest-recorded total stays under ``DV_BROADCAST_MAX``
-        positions; past that the hint is dropped and AQE picks the
-        strategy — and a table carrying that many un-compacted deletes
-        is precisely what :meth:`maintenance_plan`'s delete-ratio
-        targeting exists to flag for :meth:`compact`."""
+        Two regimes, chosen by the manifest-recorded position total
+        ``sum(dv.n)`` — known before any file is opened:
+
+        - at or under ``DV_DRIVER_MAX``: the driver reads the
+          referenced sidecars with pyarrow (:meth:`_dv_keys`) and the
+          scan drops those positions with one ``InSet`` filter, inside
+          its own job — a read is ONE Spark job, no broadcast;
+        - above it: Spark reads the sidecars (:meth:`_dv_pairs`) and
+          the scan anti-joins them — two jobs. The position frame is
+          broadcast while the total stays under ``DV_BROADCAST_MAX``;
+          past that AQE picks the strategy — and a table carrying that
+          many un-compacted deletes is precisely what
+          :meth:`maintenance_plan`'s delete-ratio targeting exists to
+          flag for :meth:`compact`."""
         spark = spark or self.spark
         entries = list(entries)
         paths = [os.path.join(self.table_dir, f["path"]) for f in entries]
@@ -1056,9 +1120,11 @@ class SnapshotTable:
             F.col("_metadata.file_name").alias("__fname"),
             F.col("_metadata.row_index").alias("__pos"),
         )
-        if dved:
+        total = sum((f.get("dv") or {}).get("n", 0) for f in dved)
+        if dved and total <= DV_DRIVER_MAX:
+            df = df.filter(~self._in_set(_POS_KEY, self._dv_keys(dved)))
+        elif dved:
             dv = self._dv_pairs(dved, spark=spark)
-            total = sum((f.get("dv") or {}).get("n", 0) for f in dved)
             if total <= DV_BROADCAST_MAX:
                 dv = F.broadcast(dv)
             df = df.join(dv, ["__fname", "__pos"], "left_anti")
@@ -1469,23 +1535,21 @@ class SnapshotTable:
         """The merge-on-read CDC fast path (see :meth:`changes`):
         pre-image ``delete`` rows at exactly the positions the
         to-side deletion vectors grew over the from-side. One scan of
-        ONLY the files whose vectors grew, with the delta positions
-        joined in — zero shuffles, zero joins of bucket states.
-        ``n_delta`` (the manifest-computed position-count delta)
-        gates the broadcast hint at ``DV_BROADCAST_MAX``, the same
-        cap every other dv consumer applies (review r14-2)."""
-        delta = self._dv_pairs(ents_to)
-        if ents_from:
-            delta = delta.join(
-                self._dv_pairs(ents_from),
-                ["__fname", "__pos"],
-                "left_anti",
-            )
-        if n_delta <= DV_BROADCAST_MAX:
-            delta = F.broadcast(delta)
+        ONLY the files whose vectors grew, kept to the delta positions
+        — zero shuffles, zero joins of bucket states. The regimes are
+        :meth:`_read_entries`' own, chosen by the to-side total:
+
+        - at or under ``DV_DRIVER_MAX``: the delta is a driver set
+          difference of the two sides' :meth:`_dv_keys`, applied as
+          one ``InSet`` filter on the scan — ONE Spark job;
+        - above it: the to-side :meth:`_dv_pairs` anti-joined with the
+          from-side's, semi-joined into the scan. ``n_delta`` (the
+          manifest-computed position-count delta) gates the broadcast
+          hint at ``DV_BROADCAST_MAX``, the same cap every other dv
+          consumer applies (review r14-2)."""
         raw = self._read_entries(
             # dv STRIPPED: the delta rows are live at `from`, deleted
-            # at `to` — the raw scan + position semi-join selects them
+            # at `to` — the raw scan kept to the delta positions
             [
                 {k: v for k, v in f.items() if k != "dv"}
                 for f in ents_to
@@ -1493,9 +1557,27 @@ class SnapshotTable:
             schema,
             keep_meta=True,
         )
+        total = sum((f.get("dv") or {}).get("n", 0) for f in ents_to)
+        if total <= DV_DRIVER_MAX:
+            hit = raw.filter(
+                self._in_set(
+                    _POS_KEY,
+                    self._dv_keys(ents_to) - self._dv_keys(ents_from),
+                )
+            )
+        else:
+            delta = self._dv_pairs(ents_to)
+            if ents_from:
+                delta = delta.join(
+                    self._dv_pairs(ents_from),
+                    ["__fname", "__pos"],
+                    "left_anti",
+                )
+            if n_delta <= DV_BROADCAST_MAX:
+                delta = F.broadcast(delta)
+            hit = raw.join(delta, ["__fname", "__pos"], "left_semi")
         return (
-            raw.join(delta, ["__fname", "__pos"], "left_semi")
-            .drop("__fname", "__pos")
+            hit.drop("__fname", "__pos")
             .withColumn("_change_type", F.lit("delete"))
             .select(*schema.fieldNames(), "_change_type")
         )
@@ -2094,7 +2176,7 @@ class SnapshotTable:
           positional-delete / Delta DV pattern. The commit writes
           O(matched rows) of (file, position) pairs to ONE sidecar
           parquet and re-points manifest entries; data files are
-          NEVER rewritten. Readers anti-join the positions back out;
+          NEVER rewritten. Readers skip those positions;
           :meth:`compact` (or any COW rewrite touching the file)
           folds them in. Best for selective deletes on huge tables —
           the weekly GDPR batch at 100 TB deletes kilobytes instead
@@ -2711,7 +2793,7 @@ class SnapshotTable:
         updated rows as new files — I/O is O(matched rows), not
         O(touched files). The anonymize-in-place GDPR update at 100 TB
         touches kilobytes. Readers see the same result as COW
-        (position anti-join + the appended rows); compaction folds as
+        (dropped positions + the appended rows); compaction folds as
         usual.
 
         Key, order, and bucket columns cannot be assigned (a key/
