@@ -271,8 +271,7 @@ def test_source_pushed_key_equality_prunes_without_discovery(spark, mock_v2):
     assert not any("top" in req for req in mock_v2.requests), mock_v2.requests
 
 
-@pytest.mark.parametrize("prefetch", ["true", "false"])
-def test_source_skip_bad_partition_packed(spark, prefetch):
+def test_source_skip_bad_partition_packed(spark):
     """With every key value packed into one task, skip-and-continue
     still isolates the failing value, not the task."""
     m = MockOData(
@@ -281,7 +280,7 @@ def test_source_skip_bad_partition_packed(spark, prefetch):
     )
     m.start()
     try:
-        opts = dict(partitionField="Structure", numPartitions="1", prefetch=prefetch)
+        opts = dict(partitionField="Structure", numPartitions="1")
         good = _read(spark, m, skipBadPartitions="true", **opts)
         assert good.rdd.getNumPartitions() == 1
         assert {r.Employee for r in good.collect()} == {"alice", "bob", "erin", "grace"}

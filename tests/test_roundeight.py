@@ -10,9 +10,7 @@ from .oracle_utils import compare_spark_vs_oracle
 from turnover_odata_etl_spark.plans.registry import all_specs
 from turnover_odata_etl_spark.plans.roundeight import (
     GIF_ORACLE,
-    SNAPSHOT_PRUNED_ORACLE,
     m_gif_decode_features,
-    s_snapshot_pruned_read,
 )
 
 TABLES = (
@@ -38,16 +36,6 @@ def test_gif_decode_features_matches_oracle(spark, sf_dir):
         _con(sf_dir),
         GIF_ORACLE,
         "m_gif_decode_features",
-    )
-
-
-def test_snapshot_pruned_read_matches_oracle(spark, sf_dir):
-    assert SNAPSHOT_PRUNED_ORACLE
-    compare_spark_vs_oracle(
-        s_snapshot_pruned_read(spark, sf_dir),
-        _con(sf_dir),
-        SNAPSHOT_PRUNED_ORACLE,
-        "s_snapshot_pruned_read",
     )
 
 

@@ -10,12 +10,10 @@ import duckdb
 from .oracle_utils import compare_spark_vs_oracle
 from turnover_odata_etl_spark.plans.roundthirteen import (
     AGG_STATS_ORACLE,
-    BLOOM_DELETE_ORACLE,
     COBUCKET_ORACLE,
     HISTORY_ORACLE,
     s_join_cobucketed,
     s_snapshot_agg_stats,
-    s_snapshot_bloom_pruned_delete,
     s_snapshot_history,
 )
 
@@ -73,15 +71,6 @@ def test_agg_stats_query_meta_row_reports_zero_reads(spark, sf_dir):
     }
     assert rows["meta"]["files_read"] == 0
     assert rows["meta"]["n_rows"] == rows["scan"]["n_rows"]
-
-
-def test_bloom_delete_query_matches_oracle(spark, sf_dir):
-    compare_spark_vs_oracle(
-        s_snapshot_bloom_pruned_delete(spark, sf_dir),
-        _con(sf_dir),
-        BLOOM_DELETE_ORACLE,
-        "s_snapshot_bloom_pruned_delete",
-    )
 
 
 def test_cobucket_query_matches_oracle(spark, sf_dir):

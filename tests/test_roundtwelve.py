@@ -430,20 +430,6 @@ def test_bm25_index_empty_before_first_wave(spark, tmp_path):
     assert out.collect() == []
 
 
-def test_zorder_skipping_matches_oracle(spark, sf_dir):
-    from turnover_odata_etl_spark.plans.roundtwelve import (
-        ZORDER_ORACLE,
-        s_snapshot_zorder_skipping,
-    )
-
-    compare_spark_vs_oracle(
-        s_snapshot_zorder_skipping(spark, sf_dir),
-        _con(sf_dir),
-        ZORDER_ORACLE,
-        "s_snapshot_zorder_skipping",
-    )
-
-
 def test_merge_into_query_matches_oracle(spark, sf_dir):
     from turnover_odata_etl_spark.plans.roundtwelve import (
         MERGE_INTO_ORACLE,

@@ -613,6 +613,39 @@ def test_read_range_without_stats_reads_everything(spark, tdir):
                                          (5, "x", 5)]
 
 
+def test_read_range_on_a_long_shared_prefix_string_order_column(
+    spark, tdir
+):
+    """A string order column whose values share a prefix longer than
+    the 16-code-point stats truncation: read_range prunes on the
+    truncated, truncation-aware ``stats`` and must return exactly the
+    rows of the unpruned filter, for windows inside, across, at a
+    point of and outside the written values."""
+    t = SnapshotTable(
+        spark, tdir, key_cols=["k"], order_col="ts", n_buckets=2
+    )
+    prefix = "2026-10-20T01:16:35.000"  # 23 code points
+
+    def ts(i):
+        return f"{prefix}{i:04d}"
+
+    for start in range(0, 40, 10):
+        t.append(spark.createDataFrame(
+            [(k, ts(k)) for k in range(start, start + 10)],
+            "k long, ts string",
+        ))
+    files = t._manifest(t.current_id())["files"]
+    assert all(f["stats"]["ts"][0] == prefix[:16] for f in files)
+    for lo, hi in [
+        (ts(5), ts(23)), (ts(31), ts(31)), (prefix, prefix + "~"),
+        (ts(100), ts(200)), ("2026", prefix),
+    ]:
+        want = t.read().filter(F.col("ts").between(lo, hi))
+        got = t.read_range(lo, hi)
+        assert sorted(got.collect()) == sorted(want.collect()), (lo, hi)
+    assert t.read_range(ts(5), ts(23)).count() == 19
+
+
 def test_old_writer_into_empty_bucket_does_not_narrow_schema(spark, tdir):
     """An old-writer batch (missing the evolved column) whose keys all
     land in buckets with NO existing files must still record the

@@ -9,7 +9,8 @@ behind. Plus the commit-path invariants every verb now shares: field-id
 tracking starts at the first evolution commit however the table was
 created, a lost full-anchor claim re-plans, so does a rename of the
 order column, and ``snapshot.py`` has one staged data write, one claim
-tail and one row-level DML attempt. One tiny table per case."""
+tail, one row-level DML attempt, one per-file pruning test and one
+bucket probe. One tiny table per case."""
 
 from __future__ import annotations
 
@@ -475,3 +476,38 @@ def test_one_staged_write_and_one_claim_tail():
     assert _calls_by_function(src, calls("_commit_dv")) == ["_dml_once"]
     group = os.path.join(os.path.dirname(src), "group.py")
     assert _calls_by_function(group, claim) == []
+
+
+def test_one_file_test_and_one_bucket_probe():
+    """Every file-pruning decision in ``snapshot.py`` goes through one
+    per-file test (footer stats, then blooms) and one bucket probe: the
+    stats overlap and the bloom membership check each have one call
+    site, and no read verb hashes or decodes a bitset itself."""
+    src = snapshot.__file__
+
+    def calls(name):
+        return lambda c: getattr(c.func, "id", None) == name
+
+    assert _calls_by_function(src, calls("_stats_overlap")) == ["may_hold"]
+    assert _calls_by_function(src, calls("_bloom_contains")) == ["may_hold"]
+    verbs = {
+        "read", "read_keys", "read_matching", "read_where", "read_range",
+        "read_pred", "read_tag", "changes",
+    }
+    tree = ast.parse(open(src).read())
+    table = next(
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "SnapshotTable"
+    )
+    seen = set()
+    for fn in table.body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name not in verbs:
+            continue
+        seen.add(fn.name)
+        for node in ast.walk(fn):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                assert "base64" not in [a.name for a in node.names], fn.name
+            if isinstance(node, ast.Attribute):
+                assert node.attr != "hash", fn.name
+                assert getattr(node.value, "id", None) != "base64", fn.name
+    assert seen == verbs

@@ -391,18 +391,14 @@ class ODataReader(DataSourceReader):
         select = self.options.get("select")
         top = int(self.options["top"]) if "top" in self.options else None
         skip = self.options.get("skipbadpartitions", "false").lower() == "true"
-        # Page prefetch (default ON): overlap page N+1's round-trip
-        # with page N's conversion — the serial pager is RTT-bound
-        # per key value. Disable with option prefetch=false (e.g. to
-        # debug wire traces in strict lockstep).
-        prefetch = self.options.get("prefetch", "true").lower() != "false"
-        pager = (
-            client.fetch_pages_prefetched if prefetch else client.fetch_pages
-        )
         for value in partition.key_values:
             filter_ = self._filter(partition.key_field, value)
             try:
-                for page in pager(entity, select=select, filter_=filter_, top=top):
+                # page N+1's round-trip overlaps page N's conversion —
+                # the serial pager is RTT-bound per key value
+                for page in client.fetch_pages_prefetched(
+                    entity, select=select, filter_=filter_, top=top
+                ):
                     yield to_batch(page)
             except Exception:
                 if not skip:

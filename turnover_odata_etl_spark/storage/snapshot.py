@@ -149,22 +149,22 @@ def _bloom_pack(positions, n_bits: int) -> str:
     return base64.b64encode(bytes(data)).decode("ascii")
 
 
-def _bloom_contains(entry: dict, raw_hashes: list) -> bool:
+def _bloom_contains(entry: dict, *raw_hashes: list) -> bool:
     """Membership probe against a manifest bloom entry: ``True`` =
-    possibly present (must read), ``False`` = PROVEN absent (sound to
-    skip). ``raw_hashes`` are the probe value's un-modded 32-bit
-    Spark hashes for seeds 0..k-1 — Python's floored ``%`` agrees
-    with the Spark ``pmod`` the build used, so probe and build index
-    the same bit."""
+    some probe value possibly present (must read), ``False`` = every
+    one PROVEN absent (sound to skip). Each of ``raw_hashes`` is one
+    probe value's un-modded 32-bit Spark hashes for seeds 0..k-1 —
+    Python's floored ``%`` agrees with the Spark ``pmod`` the build
+    used, so probe and build index the same bit. The bitset is
+    decoded once per call, however many values probe it."""
     import base64
 
     m, k = entry["m"], entry["k"]
     data = base64.b64decode(entry["b"])
-    for h in raw_hashes[:k]:
-        p = h % m
-        if not (data[p // 8] >> (p % 8)) & 1:
-            return False
-    return True
+    return any(
+        all((data[h % m // 8] >> (h % m % 8)) & 1 for h in hs[:k])
+        for hs in raw_hashes
+    )
 
 
 def _truncate_upper(s: str, length: int = _STATS_TRUNC):
@@ -1156,19 +1156,22 @@ class SnapshotTable:
         exact keys. Single-column keys only (the layout hash is on
         the full key tuple; a partial-key lookup can't prune).
 
-        The requested keys' buckets are computed THROUGH Spark's own
-        ``hash``/``pmod`` (a key-count-sized local frame — metadata,
-        never data), so pruning can never disagree with the layout.
-        At 100 TB this is the difference between a point lookup
-        opening ~1/n_buckets of the table and scanning all of it.
+        The buckets come from the shared bucket probe
+        (:meth:`_bucket_probe`) over a key-count-sized local frame
+        typed like the target snapshot's key column — metadata, never
+        data — so pruning can never disagree with the layout, and a
+        time-travel read across a rebucket uses that snapshot's own
+        bucket count. At 100 TB this is the difference between a
+        point lookup opening ~1/n_buckets of the table and scanning
+        all of it.
 
-        String keys on a bloom-enabled table prune FURTHER (round 13
-        — the per-file half of Iceberg's bloom point-lookup): within
-        the matched buckets, a file is opened only if at least one
-        requested key is bloom-possible in it, so a many-append
-        bucket opens ~the holder files instead of its whole history.
-        Bloom-less files and non-string keys keep the bucket-grain
-        prune."""
+        String keys on a bloom-enabled table prune FURTHER through
+        the shared per-file test (:meth:`_file_test`) with the keys as
+        its probe values: within the matched buckets, a file is opened
+        only if at least one requested key is bloom-possible in it, so
+        a many-append bucket opens ~the holder files instead of its
+        whole history. Bloom-less files and non-string keys keep the
+        bucket-grain prune."""
         if len(self.key_cols) != 1:
             raise ValueError("read_keys: single-column key tables only")
         sid = self.current_id() if snapshot_id is None else snapshot_id
@@ -1179,77 +1182,21 @@ class SnapshotTable:
         # (format 3 reads only the matching buckets' segments).
         m = self._raw_meta(sid)
         key = self.key_cols[0]
-        key_type = next(
-            f["type"]
-            for f in json.loads(m["schema"])["fields"]
-            if f["name"] == key
-        )
+        schema = self._schema_of(m)
         kdf = self.spark.createDataFrame(
-            [(v,) for v in key_values], f"{key} {key_type}"
+            [(v,) for v in key_values],
+            T.StructType([T.StructField(key, schema[key].dataType)]),
         )
-        # Prune with the TARGET SNAPSHOT's bucket count, not the
-        # handle's: after a rebucket, older snapshots keep their own
-        # layout, and pruning a time-travel read with the new count
-        # would open the wrong files.
-        buckets = {
-            r["b"]
-            for r in kdf.select(
-                F.pmod(F.hash(key), F.lit(m["n_buckets"])).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
+        strs = key_values and all(isinstance(v, str) for v in key_values)
+        may_hold = self._file_test({}, {key: key_values} if strs else None)
         bb = self._by_bucket(sid)
         cand = [
             f
-            for b in sorted(buckets)
+            for b in self._bucket_probe(m, kdf)
             for f in self._entries(bb.get(b, []))
+            if may_hold(f)
         ]
-        str_keys = [v for v in key_values if isinstance(v, str)]
-        if (
-            str_keys
-            and len(str_keys) == len(key_values)
-            and any((f.get("bloom") or {}).get(key) for f in cand)
-        ):
-            # key-count-sized ROW frame (like the bucket probe above
-            # — review r13: a 5·N-column projection would blow up
-            # Catalyst on large key lists), k hash columns per row
-            hash_rows = (
-                self.spark.createDataFrame(
-                    [(v,) for v in str_keys], "v string"
-                )
-                .select(
-                    *[
-                        F.hash(F.col("v"), F.lit(s)).alias(f"h{s}")
-                        for s in range(_BLOOM_K)
-                    ]
-                )
-                .collect()
-            )
-            all_hashes = [
-                [r[f"h{s}"] for s in range(_BLOOM_K)]
-                for r in hash_rows
-            ]
-
-            def may_hold(f: dict) -> bool:
-                import base64
-
-                e = (f.get("bloom") or {}).get(key)
-                if e is None:
-                    return True
-                m_bits, kk = e["m"], e["k"]
-                data = base64.b64decode(e["b"])  # decoded ONCE/file
-                for hs in all_hashes:
-                    if all(
-                        (data[(h % m_bits) // 8] >> ((h % m_bits) % 8))
-                        & 1
-                        for h in hs[:kk]
-                    ):
-                        return True
-                return False
-
-            cand = [f for f in cand if may_hold(f)]
-        return self._read_entries(cand, self._schema_of(m)).filter(
+        return self._read_entries(cand, schema).filter(
             F.col(key).isin(key_values)
         )
 
@@ -1260,13 +1207,12 @@ class SnapshotTable:
         data files whose physical bucket some row of ``keys_df``
         (which must carry the table's bucket columns) hashes into.
 
-        The distributed-scale sibling of :meth:`read_keys`: only the
+        The distributed-scale sibling of :meth:`read_keys`, through
+        the same bucket probe (:meth:`_bucket_probe`): only the
         DISTINCT PHYSICAL BUCKET IDS cross to the driver (at most
         ``n_buckets`` integers — metadata, never keys or rows), so the
-        prune works for arbitrarily large probe frames. The probe's
-        bucket ids are computed through Spark's own ``hash``/``pmod``
-        — the exact expression ``_with_bucket`` laid the files out
-        with — so pruning can never disagree with the layout.
+        prune works for arbitrarily large probe frames, and the probe
+        casts and hashes with the target snapshot's layout.
 
         The returned frame is NOT filtered to the exact probe keys:
         callers join it (that join is what the prune serves), and rows
@@ -1279,38 +1225,37 @@ class SnapshotTable:
         if sid is None:
             raise ValueError(f"snapshot table {self.table_dir}: no commits")
         m = self._raw_meta(sid)  # config only — see read_keys note
-        bcols = list(m.get("bucket_cols") or m["key_cols"])
-        # Prune with the TARGET snapshot's layout (count + columns),
-        # same rule as read_keys: time travel across a rebucket must
-        # use that snapshot's own bucket assignment. The probe columns
-        # are CAST to the table schema's types first — Spark's hash is
-        # type-sensitive (hash(7 as int) != hash(7 as long)), so an
-        # int-typed probe against a long-keyed table would otherwise
-        # prune the WRONG buckets and silently drop join rows (the
-        # same alignment read_keys does via its typed probe frame).
-        schema_types = {
-            f.name: f.dataType for f in self._schema_of(m).fields
-        }
-        hash_cols = [
-            F.col(c).cast(schema_types[c]) if c in schema_types
-            else F.col(c)
-            for c in bcols
-        ]
-        buckets = {
-            r["b"]
-            for r in keys_df.select(
-                F.pmod(F.hash(*hash_cols), F.lit(m["n_buckets"])).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
         bb = self._by_bucket(sid)
         ents = [
             f
-            for b in sorted(buckets)
+            for b in self._bucket_probe(m, keys_df)
             for f in self._entries(bb.get(b, []))
         ]
         return self._read_entries(ents, self._schema_of(m))
+
+    def _bucket_probe(self, meta: dict, frame: DataFrame) -> list:
+        """The one bucket probe every keyed prune runs: the sorted
+        distinct buckets the rows of ``frame`` hash into under
+        ``meta``'s layout — the TARGET snapshot's bucket count and
+        columns, never the handle's (after a rebucket, older snapshots
+        keep their own layout). Each bucket column is CAST to that
+        snapshot's type first: Spark's hash is type-sensitive
+        (hash(7 as int) != hash(7 as long)), so an int-typed probe
+        against a long-keyed table would otherwise prune the WRONG
+        buckets. Computed through Spark's own ``hash``/``pmod`` — the
+        expression :meth:`_with_bucket` lays files out with — and only
+        the ≤ n_buckets ids reach the driver."""
+        types = {f.name: f.dataType for f in self._schema_of(meta).fields}
+        cols = [
+            F.col(c).cast(types[c]) if c in types else F.col(c)
+            for c in meta.get("bucket_cols") or meta["key_cols"]
+        ]
+        return self._buckets_of(
+            frame.select(
+                F.pmod(F.hash(*cols), F.lit(meta["n_buckets"]))
+                .alias("__bucket")
+            )
+        )
 
     @staticmethod
     def _changed_buckets(
@@ -2272,9 +2217,9 @@ class SnapshotTable:
           before hashing AND matching — Spark's hash is type-sensitive
           (hash(7 as int) != hash(7 as long)), so an int-typed keys
           frame against a long-keyed table would prune the wrong
-          buckets and SILENTLY DELETE NOTHING (the read_matching
-          alignment, review r11) — then persisted, since it feeds the
-          bucket-target collect, the match join and the insert
+          buckets and SILENTLY DELETE NOTHING (review r11) — then
+          persisted, since it feeds the shared bucket probe
+          (:meth:`_bucket_probe`), the match join and the insert
           anti-join (without the pin a nondeterministic lineage could
           hash one version and join another). A keys frame is deduped;
           a MERGE source with a repeated key is refused (one source
@@ -2395,7 +2340,7 @@ class SnapshotTable:
                         "MERGE requires at most one source row per "
                         "target key"
                     )
-                target = self._buckets_of(self._with_bucket(src))
+                target = self._bucket_probe(base_raw, src)
                 cand = {
                     b: self._entries(base_bb[b])
                     for b in target
@@ -2672,56 +2617,66 @@ class SnapshotTable:
             rebase_ok=True,
         )
 
+    def _file_test(self, bounds: dict, probes: dict | None = None):
+        """The one per-file pruning test: returns ``may_hold(entry)``,
+        ``False`` only for a manifest entry PROVEN unable to hold a
+        wanted row. Footer stats first: an entry whose
+        ``stats[col]`` cannot overlap a ``bounds`` window
+        ``{col: (lo, hi)}`` is out (:func:`_stats_overlap`; absent
+        stats degrade to must-read). Then the blooms: an entry with a
+        bloom for a ``probes`` column ``{col: [values]}`` is out when
+        every value is a bloom negative (:func:`_bloom_contains`) —
+        exactly where truncate-16 prefix stats are blind (long shared
+        prefixes, high-cardinality emails); entries without a bloom
+        for the column stay in. The probe hashes are one Spark job,
+        run on the first entry that needs them and at most once per
+        returned test, so a table without blooms pays none."""
+        hashes: dict | None = None
+
+        def may_hold(f: dict) -> bool:
+            nonlocal hashes
+            st = f.get("stats") or {}
+            if not all(
+                st.get(c) is None or _stats_overlap(st[c], lo, hi)
+                for c, (lo, hi) in bounds.items()
+            ):
+                return False
+            bl = f.get("bloom") or {}
+            for c, vals in (probes or {}).items():
+                if bl.get(c) is None:
+                    continue
+                if hashes is None:
+                    hashes = self._bloom_raw_hashes(
+                        {(pc, v): v for pc, vs in probes.items() for v in vs}
+                    )
+                if not _bloom_contains(bl[c], *[hashes[c, v] for v in vals]):
+                    return False
+            return True
+
+        return may_hold
+
     def _split_candidates(
         self, base_bb: dict, bounds: dict
     ) -> "tuple[dict[int, list[dict]], dict[int, list[dict]]]":
-        """Stats-prune split shared by the predicate verbs: per
-        bucket, files whose footer stats could overlap the bounds
-        (candidates — must be read) vs files proven disjoint (carried
-        by reference). Absent stats degrade to must-read.
-
-        String EQUALITY bounds (``lo == hi`` — the shape
-        ``predicate_bounds`` derives from ``col = 'x'``) additionally
-        consult the per-file bloom filters (round 13): a bloom
-        negative proves the value absent from the file, so the file
-        is pruned even when its min/max window covers the probe —
-        exactly where truncate-16 prefix stats are blind (long shared
-        prefixes, high-cardinality emails). Files without a bloom for
-        the column stay candidates."""
-        eq = {
-            c: lo
-            for c, (lo, hi) in bounds.items()
-            if isinstance(lo, str) and lo == hi
-        }
-        # probe hashes are a (tiny) Spark job — computed LAZILY on
-        # the first bloom-bearing entry, so bloom-less tables (every
-        # pre-r13 table) pay nothing on this hot path (review r13)
-        hashes: dict | None = None
-
-        def may_match(f: dict) -> bool:
-            nonlocal hashes
-            st = f.get("stats") or {}
-            for col, (lo, hi) in bounds.items():
-                s = st.get(col)
-                if s is not None and not _stats_overlap(s, lo, hi):
-                    return False
-            if eq:
-                bl = f.get("bloom") or {}
-                for col in eq:
-                    e = bl.get(col)
-                    if e is None:
-                        continue
-                    if hashes is None:
-                        hashes = self._bloom_raw_hashes(eq)
-                    if not _bloom_contains(e, hashes[col]):
-                        return False
-            return True
-
+        """The predicate verbs' prune: per bucket, the files the shared
+        per-file test (:meth:`_file_test`) keeps for the bounds
+        (candidates — must be read) vs the files it proves disjoint
+        (carried by reference). String EQUALITY bounds (``lo == hi``
+        — the shape ``predicate_bounds`` derives from ``col = 'x'``)
+        are the test's bloom probe values."""
+        may_hold = self._file_test(
+            bounds,
+            {
+                c: [lo]
+                for c, (lo, hi) in bounds.items()
+                if isinstance(lo, str) and lo == hi
+            },
+        )
         cand: dict[int, list[dict]] = {}
         kept: dict[int, list[dict]] = {}
         for bkt, loc in base_bb.items():
             for f in self._entries(loc):
-                side = cand if may_match(f) else kept
+                side = cand if may_hold(f) else kept
                 side.setdefault(bkt, []).append(f)
         return cand, kept
 
@@ -3116,8 +3071,9 @@ class SnapshotTable:
         """Move staged bucket files to immutable names under data/;
         returns their manifest entries (path, bucket, rows, and —
         when the footer has them — JSON-safe ``order_min``/
-        ``order_max`` stats over the order column, the file-level
-        pruning metadata :meth:`read_range` uses)."""
+        ``order_max`` stats over the order column, which
+        :meth:`order_watermark` and :meth:`files` report, plus the
+        per-column ``stats`` every prune reads)."""
         import shutil
 
         import pyarrow.parquet as pq
@@ -3300,30 +3256,33 @@ class SnapshotTable:
                 "b": r["b64"],
             }
 
-    def _bloom_raw_hashes(self, values_by_col: dict) -> dict:
-        """Un-modded 32-bit Spark hashes for each probe value, seeds
-        0..k-1, computed THROUGH Spark's own ``hash`` on a 1-row
-        local frame (the delete_keys bucket-probe discipline: the
-        probe can never disagree with the build)."""
-        if not values_by_col:
+    def _bloom_raw_hashes(self, values_by_label: dict) -> dict:
+        """Un-modded 32-bit Spark hashes of each probe value, seeds
+        0..k-1, keyed like the input. Computed THROUGH Spark's own
+        ``hash`` (the probe can never disagree with the build) over a
+        frame of one row per value: the values are data, not
+        literals, so the generated code is the same for every probe
+        and a long key list never becomes a wide projection."""
+        if not values_by_label:
             return {}
-        cols = sorted(values_by_col)
-        row = (
-            self.spark.range(1)
-            .select(
-                *[
-                    F.hash(
-                        F.lit(values_by_col[c]).cast("string"), F.lit(s)
-                    ).alias(f"h_{i}_{s}")
-                    for i, c in enumerate(cols)
-                    for s in range(_BLOOM_K)
-                ]
+        labels = list(values_by_label)
+        rows = (
+            self.spark.createDataFrame(
+                [(i, values_by_label[lb]) for i, lb in enumerate(labels)],
+                "i int, v string",
             )
-            .first()
+            .select(
+                "i",
+                *[
+                    F.hash("v", F.lit(s)).alias(f"h{s}")
+                    for s in range(_BLOOM_K)
+                ],
+            )
+            .collect()
         )
         return {
-            c: [row[f"h_{i}_{s}"] for s in range(_BLOOM_K)]
-            for i, c in enumerate(cols)
+            labels[r["i"]]: [r[f"h{s}"] for s in range(_BLOOM_K)]
+            for r in rows
         }
 
     def _column_stats(self, meta) -> tuple[dict, dict]:
@@ -3427,17 +3386,18 @@ class SnapshotTable:
         self, column: str, lo, hi, snapshot_id: int | None = None
     ) -> DataFrame:
         """File-pruned read on ANY numeric or string column: open
-        only files whose manifest ``stats[column] = [min, max]``
-        overlaps ``[lo, hi]`` — :meth:`read_range` generalized from
-        the order column to arbitrary data-skipping (the "WHERE value
-        BETWEEN" scan a 100 TB pipeline runs constantly; with
-        range-sorted or Z-ordered layout the bounds become selective
-        and the prune skips most of the table). String stats are
-        truncation-aware (round 12 — see :meth:`_column_stats`); a
-        ``None`` stored upper means unbounded. Files without recorded
-        stats for ``column`` are conservatively read; the exact
-        predicate is applied after the prune either way, so pruning
-        can only skip files proven irrelevant.
+        only files the shared per-file test (:meth:`_file_test`) keeps
+        for the bounds ``{column: (lo, hi)}`` — manifest
+        ``stats[column] = [min, max]`` overlapping ``[lo, hi]`` (the
+        "WHERE value BETWEEN" scan a 100 TB pipeline runs constantly;
+        with range-sorted or Z-ordered layout the bounds become
+        selective and the prune skips most of the table). String stats
+        are truncation-aware (round 12 — see :meth:`_column_stats`); a
+        ``None`` stored upper means unbounded. A string POINT probe
+        (``lo == hi``) is also the test's bloom probe value. Files
+        without recorded stats for ``column`` are conservatively read;
+        the exact predicate is applied after the prune either way, so
+        pruning can only skip files proven irrelevant.
 
         ``lo``/``hi`` must live in ONE domain (both strings or both
         numbers; ADVICE r12): a mixed pair is refused here with a
@@ -3453,30 +3413,11 @@ class SnapshotTable:
         if sid is None:
             raise ValueError(f"snapshot table {self.table_dir}: no commits")
         m = self._manifest(sid)
-        # a string POINT probe (lo == hi) additionally consults the
-        # per-file blooms (round 13) — see _split_candidates; hashes
-        # are computed lazily on the first bloom-bearing entry so
-        # bloom-less tables pay no extra Spark job (review r13)
-        is_point = isinstance(lo, str) and lo == hi
-        hs: list | None = None
-
-        def must_read(f: dict) -> bool:
-            nonlocal hs
-            if is_point:
-                e = (f.get("bloom") or {}).get(column)
-                if e is not None:
-                    if hs is None:
-                        hs = self._bloom_raw_hashes({column: lo})[
-                            column
-                        ]
-                    if not _bloom_contains(e, hs):
-                        return False
-            s = (f.get("stats") or {}).get(column)
-            if s is None:
-                return True
-            return _stats_overlap(s, lo, hi)
-
-        files = [f for f in m["files"] if must_read(f)]
+        point = isinstance(lo, str) and lo == hi
+        may_hold = self._file_test(
+            {column: (lo, hi)}, {column: [lo]} if point else None
+        )
+        files = [f for f in m["files"] if may_hold(f)]
         return self._read_entries(files, self._schema_of(m)).filter(
             F.col(column).between(F.lit(lo), F.lit(hi))
         )
@@ -3485,14 +3426,15 @@ class SnapshotTable:
         self, predicate: str, snapshot_id: int | None = None
     ) -> DataFrame:
         """File-pruned read for an arbitrary SQL predicate — the
-        read-side sibling of :meth:`delete_where`'s prune (round 13):
-        :func:`predicate_bounds` mines per-column ``[lo, hi]`` bounds
-        from a provable AND-chain, files disjoint from ANY bound are
-        never opened, string EQUALITY conjuncts additionally consult
-        the per-file bloom filters, and the exact predicate applies
-        after the prune (rows where it evaluates TRUE — SQL WHERE
-        semantics). An unparseable predicate degrades to a full scan
-        with the filter applied, never to a wrong answer.
+        read-side sibling of :meth:`delete_where`'s prune, through the
+        same :meth:`_split_candidates`: :func:`predicate_bounds` mines
+        per-column ``[lo, hi]`` bounds from a provable AND-chain, the
+        shared per-file test (:meth:`_file_test`) drops files disjoint
+        from ANY bound or bloom-negative for a string EQUALITY
+        conjunct, and the exact predicate applies after the prune
+        (rows where it evaluates TRUE — SQL WHERE semantics). An
+        unparseable predicate degrades to a full scan with the filter
+        applied, never to a wrong answer.
 
         This is the ``WHERE a BETWEEN x AND y AND email = 'z'`` scan
         :meth:`read_where` can't express (one column, one window);
@@ -3762,27 +3704,16 @@ class SnapshotTable:
     def read_range(
         self, lo, hi, snapshot_id: int | None = None
     ) -> DataFrame:
-        """File-pruned RANGE read on the order column: open only
-        files whose footer ``[order_min, order_max]`` overlaps
-        ``[lo, hi]`` (Iceberg's column-stats pruning in miniature —
-        the time-series read path: "events in this id/time window"
-        touches only the files that hold it). Files without recorded
-        stats (pre-upgrade manifests) are conservatively read; the
-        exact predicate is applied after the prune either way, so
-        pruning can only skip files proven irrelevant."""
-        sid = self.current_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError(f"snapshot table {self.table_dir}: no commits")
-        m = self._manifest(sid)
-        files = [
-            f
-            for f in m["files"]
-            if "order_min" not in f
-            or not (f["order_max"] < lo or f["order_min"] > hi)
-        ]
-        return self._read_entries(files, self._schema_of(m)).filter(
-            F.col(self.order_col).between(F.lit(lo), F.lit(hi))
-        )
+        """File-pruned RANGE read on the order column — the
+        time-series read path ("events in this id/time window" touches
+        only the files that hold it): :meth:`read_where` on
+        ``order_col``, so the files opened are the ones the shared
+        per-file test keeps for its truncation-aware
+        ``stats[order_col]``. Files without recorded stats are
+        conservatively read; the exact predicate is applied after the
+        prune either way, so pruning can only skip files proven
+        irrelevant."""
+        return self.read_where(self.order_col, lo, hi, snapshot_id)
 
     def _diverged_buckets(
         self, from_id: int | None, to_id: int | None
@@ -3804,27 +3735,26 @@ class SnapshotTable:
             if a.get(k, []) is not b.get(k, []) and a.get(k, []) != b.get(k, [])
         }
 
-    @staticmethod
-    def _entries_cannot_match(entries: list, bounds: dict) -> bool:
-        """True iff EVERY entry's per-file stats PROVE no row in it
-        can satisfy ``bounds`` (``predicate_bounds`` output).
-        Strictly conservative: empty bounds (unparseable predicate),
-        an entry without stats on any bound column, or any stats
-        window overlapping its bound all return False — the caller
-        must then take the always-correct path."""
-        if not bounds:
-            return False
-        for f in entries:
-            st = f.get("stats") or {}
-            proven = False
-            for col, (lo, hi) in bounds.items():
-                s = st.get(col)
-                if s is not None and not _stats_overlap(s, lo, hi):
-                    proven = True
-                    break
-            if not proven:
-                return False
-        return True
+    def _gained_match(
+        self, base_id: int, head_id: int, changed: set, predicates: list
+    ) -> int | None:
+        """The proof a predicate verb's rebase and a branch publish
+        both run: the first bucket of ``changed`` in which
+        ``head_id`` holds a file ``base_id`` did not (by path — a
+        deletion-vector flip only shrinks visible rows) that ANY of
+        ``predicates`` could match by the stats half of the shared
+        per-file test; ``None`` when every such file is proven
+        irrelevant. Strictly conservative: an unparseable predicate
+        (empty bounds) or a stats-less file counts as a match."""
+        tests = [self._file_test(predicate_bounds(p)) for p in predicates]
+        base_bb = self._by_bucket(base_id)
+        head_bb = self._by_bucket(head_id)
+        for bkt in changed:
+            old = {e["path"] for e in self._entries(base_bb.get(bkt, []))}
+            for e in self._entries(head_bb.get(bkt, [])):
+                if e["path"] not in old and any(t(e) for t in tests):
+                    return bkt
+        return None
 
     @staticmethod
     def _permissive_type(dt):
@@ -3995,27 +3925,12 @@ class SnapshotTable:
                 ) from last
             pred = (properties or {}).get("read.predicate")
             if pred is not None and changed:
-                bounds = predicate_bounds(pred)
-                base_bb_v = self._by_bucket(base_id)
-                cur_bb_v = self._by_bucket(cur)
-                for bkt in changed:
-                    base_paths = {
-                        e["path"]
-                        for e in self._entries(base_bb_v.get(bkt, []))
-                    }
-                    fresh = [
-                        e
-                        for e in self._entries(cur_bb_v.get(bkt, []))
-                        if e["path"] not in base_paths
-                    ]
-                    if fresh and not self._entries_cannot_match(
-                        fresh, bounds
-                    ):
-                        raise CommitConflict(
-                            f"rebase: bucket {bkt} gained files the "
-                            f"predicate {pred!r} could match — "
-                            "re-plan"
-                        ) from last
+                bkt = self._gained_match(base_id, cur, changed, [pred])
+                if bkt is not None:
+                    raise CommitConflict(
+                        f"rebase: bucket {bkt} gained files the "
+                        f"predicate {pred!r} could match — re-plan"
+                    ) from last
             # Segment large touched buckets ONCE: the first attempt
             # writes the segment files, and the refs then carry
             # VERBATIM through _maybe_segment on every further
@@ -5173,30 +5088,10 @@ class SnapshotBranch(SnapshotTable):
             # their predicate: every file main ADDED since the fork
             # must be stats-proven unable to match EACH predicate
             # (the _rebase_commit round-16 rule, applied at publish)
-            if preds and changed:
-                head_bb_m = self._main._by_bucket(main_head)
-                base_bb_m = self._main._by_bucket(base_for)
-                for bkt in changed:
-                    old_paths = {
-                        e["path"]
-                        for e in self._main._entries(
-                            base_bb_m.get(bkt, [])
-                        )
-                    }
-                    fresh = [
-                        e
-                        for e in self._main._entries(
-                            head_bb_m.get(bkt, [])
-                        )
-                        if e["path"] not in old_paths
-                    ]
-                    if fresh and not all(
-                        self._entries_cannot_match(
-                            fresh, predicate_bounds(pr)
-                        )
-                        for pr in preds
-                    ):
-                        raise refusal
+            if preds and changed and self._main._gained_match(
+                base_for, main_head, changed, preds
+            ) is not None:
+                raise refusal
             base_for = main_head  # disjoint: rebase onto the head
             base_bb = self._main._by_bucket(main_head)
         head_raw = self._raw_meta(head)
