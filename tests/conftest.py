@@ -43,7 +43,12 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from turnover_odata_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # Four task slots: the fixture tables are a few KB, so each stage
+    # is scheduling and Python-worker start-up, not compute, and more
+    # slots than a small host's cores only add contention (the suite
+    # ran ~25% slower under local[8] on 4 vCPUs). Shuffle partitions
+    # stay at 8, so plans and file layouts match the other settings.
+    spark = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
     yield spark
 
 
