@@ -96,21 +96,6 @@ def test_flac_decode_features_matches_oracle(spark, sf_dir):
     )
 
 
-def test_snapshot_changes_matches_oracle(spark, sf_dir):
-    from turnover_odata_etl_spark.plans.roundeight import (
-        SNAPSHOT_CHANGES_ORACLE,
-        s_snapshot_changes,
-    )
-
-    assert SNAPSHOT_CHANGES_ORACLE
-    compare_spark_vs_oracle(
-        s_snapshot_changes(spark, sf_dir),
-        _con(sf_dir),
-        SNAPSHOT_CHANGES_ORACLE,
-        "s_snapshot_changes",
-    )
-
-
 def test_exact_substr_spans_matches_oracle(spark, sf_dir):
     from turnover_odata_etl_spark.plans.roundeight import (
         EXACT_SUBSTR_ORACLE,
@@ -141,21 +126,6 @@ def test_exact_substr_spans_nontrivial(spark, sf_dir):
         .first()
     )
     assert got[0] > 0 and got[1] > 0
-
-
-def test_snapshot_incremental_agg_matches_oracle(spark, sf_dir):
-    from turnover_odata_etl_spark.plans.roundeight import (
-        SNAPSHOT_IVM_ORACLE,
-        s_snapshot_incremental_agg,
-    )
-
-    assert SNAPSHOT_IVM_ORACLE
-    compare_spark_vs_oracle(
-        s_snapshot_incremental_agg(spark, sf_dir),
-        _con(sf_dir),
-        SNAPSHOT_IVM_ORACLE,
-        "s_snapshot_incremental_agg",
-    )
 
 
 def test_tiff_decode_features_matches_oracle(spark, sf_dir):

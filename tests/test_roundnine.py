@@ -134,21 +134,6 @@ def test_snapshot_lifecycle_expires_old_layout(spark, sf_dir):
     assert t.n_buckets == 4
 
 
-def test_st_snapshot_ivm_matches_oracle(spark, sf_dir):
-    from turnover_odata_etl_spark.plans.roundnine import (
-        SNAPSHOT_IVM_STREAM_ORACLE,
-        st_snapshot_ivm,
-    )
-
-    assert SNAPSHOT_IVM_STREAM_ORACLE
-    compare_spark_vs_oracle(
-        st_snapshot_ivm(spark, sf_dir),
-        _con(sf_dir),
-        SNAPSHOT_IVM_STREAM_ORACLE,
-        "st_snapshot_ivm",
-    )
-
-
 def test_snapshot_skipping_matches_oracle(spark, sf_dir):
     from turnover_odata_etl_spark.plans.roundnine import (
         SNAPSHOT_SKIPPING_ORACLE,

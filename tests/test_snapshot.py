@@ -1325,6 +1325,36 @@ def test_compact_carries_untouched_buckets_by_reference(spark, tdir):
         assert len(post[b]) == 1 and post[b] != pre[b]
 
 
+def test_compact_buckets_checks_the_layout_it_commits_on(spark, tdir):
+    """``compact(buckets=...)`` checks the bucket list against the
+    on-disk layout, not the handle's: after another handle rebuckets
+    2 -> 4, a handle loaded at 2 buckets compacts bucket 3, and after a
+    rebucket back to 2 a handle built at 4 refuses bucket 3 instead of
+    compacting nothing."""
+    t = make_table(spark, tdir, n_buckets=2)
+    t.append(batch(spark, [(i, f"v{i}", 1) for i in range(20)]))
+    expected = rows(t.read())
+    other = make_table(spark, tdir)
+    other.rebucket(4)
+    pre = other._by_bucket(other.current_id())
+    assert pre.get(3)
+    sid = t.compact(buckets=[3])
+    assert sid == 3 and t._manifest_raw(sid)["operation"] == "compact"
+    post = t._by_bucket(sid)
+    assert len(post[3]) == 1 and post[3] != pre[3]
+    assert {b: fs for b, fs in post.items() if b != 3} == {
+        b: fs for b, fs in pre.items() if b != 3
+    }
+    assert rows(t.read()) == expected
+    stale = make_table(spark, tdir, n_buckets=4)
+    other.rebucket(2)
+    with pytest.raises(
+        ValueError, match=r"compact: unknown buckets \[3\] \(layout has 2\)"
+    ):
+        stale.compact(buckets=[3])
+    assert stale.current_id() == 4
+
+
 def test_compact_restores_read_where_pruning(spark, tdir):
     """Compaction recomputes per-file stats: a read_where range probe
     on the compacted table still prunes (footer stats survived the

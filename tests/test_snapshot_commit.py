@@ -9,7 +9,8 @@ behind. Plus the commit-path invariants every verb now shares: field-id
 tracking starts at the first evolution commit however the table was
 created, a lost full-anchor claim re-plans, so does a rename of the
 order column, and ``snapshot.py`` has one staged data write, one claim
-tail, one row-level DML attempt, one per-file pruning test and one
+tail, one row-level DML attempt, one bucket-rewrite attempt, one
+base-state read per write attempt, one per-file pruning test and one
 bucket probe. One tiny table per case."""
 
 from __future__ import annotations
@@ -476,6 +477,66 @@ def test_one_staged_write_and_one_claim_tail():
     assert _calls_by_function(src, calls("_commit_dv")) == ["_dml_once"]
     group = os.path.join(os.path.dirname(src), "group.py")
     assert _calls_by_function(group, claim) == []
+
+
+def _methods(path, cls):
+    """{method name: FunctionDef} of class ``cls`` in ``path``."""
+    tree = ast.parse(open(path).read())
+    body = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == cls
+    ).body
+    return {fn.name: fn for fn in body if isinstance(fn, ast.FunctionDef)}
+
+
+def _reaching(methods, match):
+    """Sorted names of the methods whose body holds a node ``match``
+    accepts (nested functions and lambdas included)."""
+    return sorted(
+        name for name, fn in methods.items()
+        if any(match(n) for n in ast.walk(fn))
+    )
+
+
+def test_one_bucket_rewrite_prepare_and_one_base_state():
+    """The whole-bucket rewrites share one attempt and every write
+    attempt reads its base state through one helper: ``snapshot.py``
+    builds the keep-latest ``row_number()`` window in one place;
+    ``merge``, ``compact``, ``rewrite_zorder`` and the group's merge
+    members reach the one prepare; and among the write paths only the
+    helper raises "no commits"."""
+    src = snapshot.__file__
+    group = os.path.join(os.path.dirname(src), "group.py")
+
+    def calls(name):
+        return lambda n: (
+            isinstance(n, ast.Call) and getattr(n.func, "attr", None) == name
+        )
+
+    assert _calls_by_function(src, calls("row_number")) == ["_prepare_rewrite"]
+    table = _methods(src, "SnapshotTable")
+    assert _reaching(table, calls("_prepare_rewrite")) == [
+        "compact", "merge", "rewrite_zorder",
+    ]
+    members = _methods(group, "SnapshotGroup")
+    assert _reaching(members, calls("_prepare_rewrite")) == [
+        "apply_all", "merge_all",
+    ]
+    assert _calls_by_function(group, calls("_prepare_merge")) == []
+
+    def no_commits(n):
+        return isinstance(n, ast.Raise) and any(
+            isinstance(c, ast.Constant) and "no commits" in str(c.value)
+            for c in ast.walk(n)
+        )
+
+    reads = {
+        "load", "files", "read", "read_keys", "read_matching",
+        "read_where", "read_pred", "agg_stats",
+    }
+    # merge_into's bootstrap hint runs before its first attempt
+    assert set(_reaching(table, no_commits)) - reads == {
+        "_base_state", "merge_into",
+    }
 
 
 def test_one_file_test_and_one_bucket_probe():

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -464,6 +465,33 @@ def test_group_prepare_failure_cleans_temp_manifests(spark, gdir):
         {"a": batch(spark, [(2, 2)]), "b": batch(spark, [(8, 2)])}
     )
     assert out == {"a": 2, "b": 2}
+
+
+def test_group_append_checks_key_and_order_columns(spark, gdir):
+    """A group append refuses a batch missing a key column exactly as
+    ``SnapshotTable.append`` does. On a table bucketed on a strict
+    subset of its key such a batch would otherwise stage and commit
+    rows that read back with NULL keys."""
+    t = SnapshotTable(
+        spark, os.path.join(gdir, "t"), key_cols=["a", "b"],
+        order_col="ver", n_buckets=2, bucket_cols=["a"],
+    )
+    g = SnapshotGroup({"t": t}, gdir)
+    g.append_all(
+        {"t": spark.createDataFrame([(1, 1, 1)], "a long, b long, ver long")}
+    )
+    txns = sorted(os.listdir(g._txn_dir))
+    bad = spark.createDataFrame([(2, 1)], "a long, ver long")
+    msg = re.escape("append: batch is missing key/order columns ['b']")
+    with pytest.raises(ValueError, match=msg):
+        t.append(bad)
+    with pytest.raises(ValueError, match=msg):
+        g.append_all({"t": bad})
+    with pytest.raises(ValueError, match=msg):
+        g.apply_all({"t": ("append", bad)})
+    assert t.current_id() == 1
+    assert sorted(os.listdir(g._txn_dir)) == txns
+    assert {tuple(r) for r in t.read().collect()} == {(1, 1, 1)}
 
 
 def test_group_foreign_steal_abort_txn_repairs(spark, gdir, monkeypatch):

@@ -23,8 +23,9 @@ The pieces, in production order:
   tree; codegen emits straight-line longs (verified in the plan —
   no Python eval node). Consumers must materialize each quantized
   input ONCE before feeding it here (a Generate boundary — see
-  ``_zorder_once``): morton references every input ``bits`` times
-  and HOF folds are CodegenFallback, so inlining re-evaluates them.
+  ``SnapshotTable.rewrite_zorder``): morton references every input
+  ``bits`` times and HOF folds are CodegenFallback, so inlining
+  re-evaluates them.
 - :func:`quantize` — the linear min-max grid, kept for
   uniformly-distributed data where the bounds are already known and
   the quantile pass would be pure overhead. Do NOT reach for it

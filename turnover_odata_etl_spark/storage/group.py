@@ -283,8 +283,8 @@ class SnapshotGroup:
         return self._txn_all(
             batches,
             max_retries,
-            lambda name, t, df: t._prepare_merge(
-                df, tf.get(name), properties=properties
+            lambda name, t, df: t._prepare_rewrite(
+                "merge", df, tf.get(name), properties, keep_latest=True
             ),
             op="merge",
         )
@@ -391,8 +391,8 @@ class SnapshotGroup:
             if verb == "append":
                 return t._prepare_append(df, properties=properties)
             if verb == "merge":
-                return t._prepare_merge(
-                    df, tf.get(name), properties=properties
+                return t._prepare_rewrite(
+                    "merge", df, tf.get(name), properties, keep_latest=True
                 )
             return t._prepare_overwrite(df, properties=properties)
 

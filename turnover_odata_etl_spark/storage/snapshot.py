@@ -761,7 +761,7 @@ class SnapshotTable:
         (O(n_buckets)) and replaces only the delta's buckets — the
         untouched buckets' file LISTS are carried by reference, never
         copied or iterated. This is what makes the merge hot path flat
-        in table size (VERDICT r09 item 5): ``_prepare_merge`` and
+        in table size (VERDICT r09 item 5): ``_prepare_rewrite`` and
         ``_build_delta`` consult only this view for the touched
         buckets, so a micro-batch commit on a 10⁶-file table walks
         O(n_buckets + touched files) entries, not O(F). The flat
@@ -1623,6 +1623,179 @@ class SnapshotTable:
             f"{label} lost the commit race {max_retries} times"
         ) from last
 
+    def _base_state(
+        self,
+        verb: str = "",
+        batch: DataFrame | None = None,
+        buckets: list[int] | None = None,
+    ) -> "tuple[int | None, dict | None, dict]":
+        """The base state one write attempt plans on, read once:
+        ``(base_id, base_raw, base_bb)`` — the current id, its config
+        view (:meth:`_raw_meta`, O(1): no flat file list) and its
+        structurally-shared per-bucket view (:meth:`_by_bucket`). The
+        handle first adopts the on-disk layout (:meth:`_adopt_layout`),
+        so a handle built with stale values, or racing a rebucket (the
+        CAS retry re-enters here), never mixes layouts in one
+        snapshot. A table without commits raises, unless a ``batch``
+        may make the first commit: ``(None, None, {})``.
+
+        The verb's inputs are checked AFTER adoption, against the names
+        and layout the attempt commits on (a rename moves the key/order
+        names, a rebucket the bucket count): the ``batch`` must carry
+        the key and order columns, and ``buckets`` must exist."""
+        base_id = self.current_id()
+        base_raw, base_bb = None, {}
+        if base_id is not None:
+            base_raw = self._raw_meta(base_id)
+            self._adopt_layout(base_raw)
+            base_bb = self._by_bucket(base_id)
+        elif batch is None:
+            raise ValueError(f"snapshot table {self.table_dir}: no commits")
+        if batch is not None:
+            missing = [
+                c
+                for c in (*self.key_cols, self.order_col)
+                if c not in batch.columns
+            ]
+            if missing:
+                raise ValueError(
+                    f"{verb}: batch is missing key/order columns {missing}"
+                )
+        if buckets is not None:
+            unknown = sorted(set(buckets) - set(range(self.n_buckets)))
+            if unknown:
+                raise ValueError(
+                    f"{verb}: unknown buckets {unknown} "
+                    f"(layout has {self.n_buckets})"
+                )
+        return base_id, base_raw, base_bb
+
+    def _prepare_rewrite(
+        self,
+        operation: str,
+        batch: DataFrame | None = None,
+        tombstones: str | None = None,
+        properties: dict | None = None,
+        base: tuple | None = None,
+        touched: list | None = None,
+        keep_latest: bool = False,
+        layout: tuple | None = None,
+    ) -> "tuple[dict, int, dict] | int":
+        """The one bucket-rewrite attempt, up to — not including — the
+        commit claim: read the touched buckets' rows aligned to the
+        base schema, union the ``batch`` into them, fold, lay out,
+        stage them through :meth:`_stage_rewrite`, and build the delta
+        that replaces the touched buckets' files
+        (:meth:`_build_delta`). Returns the base id for a no-op, else
+        ``(manifest, new_id, merged_bb)`` for the caller to claim —
+        through :meth:`_claim_or_rebase`, or as one member of a grouped
+        transaction (:class:`SnapshotGroup`). Staged data files are
+        durable under ``data/`` when this returns; until a claim lands
+        they are unreferenced orphans (the crash-before-claim
+        contract).
+
+        * A **batch** verb (``merge``) passes its ``batch``: the base
+          state is read here (the batch may make the first commit),
+          the bucketed batch is pinned across its two consumers — the
+          touched-bucket probe job and the staged write, which for the
+          incremental operators would otherwise compute a join or
+          aggregation tree twice — and the touched buckets are the
+          ones it hashes to. The union is ADDITIVE schema evolution
+          (``allowMissingColumns``): a batch with a new column widens
+          the table, an old writer's batch reads NULL for newer
+          columns, and the recorded schema is always base ∪ batch —
+          also when every touched bucket is empty, since the base read
+          is then an empty frame in the base schema. The read uses the
+          batch's own session: inside ``foreachBatch`` the micro-batch
+          belongs to a cloned session, and a union or join must not
+          cross sessions. An empty batch leaves history clean, unless
+          ``properties`` are given: then an existing table gets a
+          metadata-only commit — otherwise an IVM view's
+          ``reflects_base`` watermark would lag on no-op batches and
+          ``latest_property``'s one-manifest fast path would break
+          (ADVICE r08) — and a table without commits records an empty
+          first snapshot so it becomes readable.
+        * A **maintenance** verb (``compact``, ``rewrite_zorder``)
+          passes the ``base`` it planned on and the ``touched``
+          buckets it picked; no touched bucket is a no-op, and the
+          schema stays the base's.
+
+        ``keep_latest`` folds each key to its latest row (MERGE's
+        window, compact's dedup) and ``tombstones`` then drops every
+        key whose latest row matches (CDC APPLY).
+        ``layout`` is ``(step, sort, max_records, scratch)``: ``step``
+        maps the bucketed rows before the write, and the rest go to
+        :meth:`_stage_rewrite` in place of the order-column sort.
+        Untouched buckets carry BY REFERENCE through ``base_bb``;
+        nothing O(table) is built, and a touched bucket whose every
+        row was dropped records ``[]``."""
+        from pyspark import StorageLevel
+
+        pinned = None
+        if batch is not None:
+            base = self._base_state(operation, batch)
+            pinned = self._with_bucket(batch).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+        base_id, base_raw, base_bb = base
+        try:
+            if pinned is not None:
+                touched = self._buckets_of(pinned)
+            if not touched:
+                if pinned is None or (base_id is not None and not properties):
+                    return base_id
+                return self._build_delta(
+                    base_raw["schema"]
+                    if base_raw is not None
+                    else pinned.drop("__bucket").schema.json(),
+                    base_bb, {}, operation=operation, base_id=base_id,
+                    properties=properties,
+                )
+            rows = pinned
+            if base_raw is not None:
+                spark = self.spark if batch is None else batch.sparkSession
+                rows = self._with_bucket(
+                    self._read_entries(
+                        [
+                            f
+                            for bkt in touched
+                            for f in self._entries(base_bb.get(bkt, []))
+                        ],
+                        self._schema_of(base_raw),
+                        spark=spark,
+                    )
+                )
+                if pinned is not None:
+                    rows = rows.unionByName(pinned, allowMissingColumns=True)
+            if keep_latest:  # one row per key: the highest order value
+                w = Window.partitionBy(*self.key_cols).orderBy(
+                    F.col(self.order_col).desc()
+                )
+                rows = (
+                    rows.withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") == 1)
+                    .drop("__rn")
+                )
+            if tombstones is not None:
+                rows = rows.filter(f"NOT ({tombstones})")
+            sort, max_records, scratch = self.order_col, None, ()
+            if layout is not None:
+                step, sort, max_records, scratch = layout
+                rows = step(rows)
+            new_files = self._stage_rewrite(
+                rows, len(touched), sort, max_records, scratch
+            )
+        finally:
+            if pinned is not None:
+                pinned.unpersist()
+        return self._build_delta(
+            base_raw["schema"]
+            if pinned is None
+            else rows.drop("__bucket").schema.json(),
+            base_bb, {bkt: [] for bkt in touched}, operation=operation,
+            base_id=base_id, properties=properties, new_files=new_files,
+        )
+
     def merge(
         self,
         batch_df: DataFrame,
@@ -1640,11 +1813,17 @@ class SnapshotTable:
         stamp which base snapshot a commit reflects, surviving even
         commits whose every row is a tombstone. Retries the whole
         merge on a lost CAS, re-reading the winner's state (optimistic
-        concurrency)."""
+        concurrency).
+
+        One :meth:`_prepare_rewrite` attempt with the ``batch``, its
+        ``tombstones`` and ``properties``, and ``keep_latest``."""
         return self._retry(
             "merge",
             lambda: self._claim_or_rebase(
-                self._prepare_merge(batch_df, tombstone_filter, properties),
+                self._prepare_rewrite(
+                    "merge", batch_df, tombstone_filter, properties,
+                    keep_latest=True,
+                ),
                 rebase_ok=True,
             ),
             max_retries,
@@ -1683,21 +1862,6 @@ class SnapshotTable:
         from the current manifest, optional commit ``properties``,
         CAS retry on a lost race, and an empty batch leaving history
         clean (metadata-only commit iff ``properties`` given)."""
-        # adopt BEFORE validating (round 16 review: a rename moves
-        # the key/order names, and a handle constructed with the
-        # pre-rename names must accept correctly-named batches)
-        sid0 = self.current_id()
-        if sid0 is not None:
-            self._adopt_layout(self._raw_meta(sid0))
-        missing = [
-            c
-            for c in (*self.key_cols, self.order_col)
-            if c not in batch_df.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"append: batch is missing key/order columns {missing}"
-            )
         return self._retry(
             "append",
             lambda: self._claim_or_rebase(
@@ -1710,20 +1874,10 @@ class SnapshotTable:
         self, batch_df: DataFrame, properties: dict | None
     ) -> "tuple[dict, int, dict] | int":
         """Everything APPEND does up to — not including — the commit
-        claim: staged write, file promotion, manifest construction.
-        Returns the plain base id for the no-op case, else
-        ``(manifest, new_id, merged_bb)`` for the caller to claim —
-        through :meth:`_claim_or_rebase`, or as one member of a
-        grouped transaction (:class:`SnapshotGroup`). Staged data
-        files are durable under ``data/`` when this returns; until a
-        claim lands they are unreferenced orphans, exactly the
-        existing crash-before-claim contract."""
-        base_id = self.current_id()
-        base_bb: dict = {}
-        if base_id:
-            base_raw = self._raw_meta(base_id)
-            self._adopt_layout(base_raw)
-            base_bb = self._by_bucket(base_id)
+        claim: staged write, file promotion, manifest construction
+        (the :meth:`_prepare_rewrite` return contract)."""
+        base_id, base_raw, base_bb = self._base_state("append", batch_df)
+        if base_raw is not None:
             # Additive evolution on EMPTY frames: the union computes
             # base ∪ batch column sets without reading a single row
             # (the data files align lazily via _aligned_read).
@@ -1787,85 +1941,45 @@ class SnapshotTable:
         inline entry list: probing segment-backed buckets for dvs
         would resolve O(table files) of segment payload on every
         no-op nightly call (review r14) — plan those explicitly via
-        ``maintenance_plan`` → ``buckets=``."""
-        if buckets is not None:
-            unknown = sorted(set(buckets) - set(range(self.n_buckets)))
-            if unknown:
-                raise ValueError(
-                    f"compact: unknown buckets {unknown} "
-                    f"(layout has {self.n_buckets})"
-                )
-        return self._retry(
-            "compact",
-            lambda: self._compact_once(min_files, dedup_keys, buckets),
-            max_retries,
-        )
+        ``maintenance_plan`` → ``buckets=``.
 
-    def _compact_once(
-        self,
-        min_files: int,
-        dedup_keys: bool,
-        buckets: list[int] | None = None,
-    ) -> int:
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        touched = sorted(
-            bkt
-            for bkt, loc in base_bb.items()
-            if self._loc_n(loc)
-            and (
-                dedup_keys
-                or (buckets is not None and bkt in buckets)
-                or self._loc_n(loc) >= min_files
-                # an INLINE deletion-vector-carrying bucket also
-                # qualifies — compaction folds MOR deletes back into
-                # data files (the Iceberg/Delta rewrite rule). Only
-                # inline locators are probed: resolving seg refs here
-                # would cost O(table files) per no-op nightly call
-                # (review r14); seg-backed dv buckets are targeted
-                # via maintenance_plan -> buckets=
-                or (
-                    isinstance(loc, list)
-                    and any(f.get("dv") for f in loc)
+        One :meth:`_prepare_rewrite` attempt with the ``base`` it
+        planned on, the qualifying buckets as ``touched`` and
+        ``keep_latest=dedup_keys``; a lost CAS rebases."""
+
+        def once() -> int:
+            base = self._base_state("compact", buckets=buckets)
+            touched = sorted(
+                bkt
+                for bkt, loc in base[2].items()
+                if self._loc_n(loc)
+                and (
+                    dedup_keys
+                    or (buckets is not None and bkt in buckets)
+                    or self._loc_n(loc) >= min_files
+                    # an INLINE deletion-vector-carrying bucket also
+                    # qualifies — compaction folds MOR deletes back
+                    # into data files (the Iceberg/Delta rewrite
+                    # rule). Only inline locators are probed:
+                    # resolving seg refs here would cost O(table
+                    # files) per no-op nightly call (review r14);
+                    # seg-backed dv buckets are targeted via
+                    # maintenance_plan -> buckets=
+                    or (
+                        isinstance(loc, list)
+                        and any(f.get("dv") for f in loc)
+                    )
                 )
             )
-        )
-        if not touched:
-            return base_id
-        ents = [
-            f
-            for bkt in touched
-            for f in self._entries(base_bb[bkt])
-        ]
-        cur = self._read_entries(
-            ents, self._schema_of(base_raw),
-            spark=self.spark,
-        )
-        if dedup_keys:
-            w = Window.partitionBy(*self.key_cols).orderBy(
-                F.col(self.order_col).desc()
+            return self._claim_or_rebase(
+                self._prepare_rewrite(
+                    "compact", base=base, touched=touched,
+                    keep_latest=dedup_keys,
+                ),
+                rebase_ok=True,
             )
-            cur = (
-                cur.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        new_files = self._stage_rewrite(
-            self._with_bucket(cur), len(touched), self.order_col
-        )
-        return self._claim_or_rebase(
-            self._build_delta(
-                base_raw["schema"], base_bb, {b: [] for b in touched},
-                operation="compact", base_id=base_id, new_files=new_files,
-            ),
-            rebase_ok=True,
-        )
+
+        return self._retry("compact", once, max_retries)
 
     def rewrite_zorder(
         self,
@@ -1915,111 +2029,85 @@ class SnapshotTable:
         N commits touched, a few per night, instead of one O(table)
         job). Quantile cuts come from the scoped rows — clustering
         quality only; pruning correctness always rests on exact
-        footer stats."""
-        return self._retry(
-            "rewrite_zorder",
-            lambda: self._zorder_once(cols, rows_per_file, bits, buckets),
-            max_retries,
-        )
+        footer stats.
 
-    def _zorder_once(
-        self,
-        cols: list[str],
-        rows_per_file: int,
-        bits: int,
-        buckets: list[int] | None = None,
-    ) -> int:
+        One :meth:`_prepare_rewrite` attempt with the ``base`` it
+        planned on, the non-empty ``buckets`` as ``touched`` and the
+        quantize + Morton ``layout`` (sorted on ``__z``, split at
+        ``rows_per_file``, scratch ``__z``/``__qs``); a lost CAS
+        re-plans."""
         from ..functions.zorder import (
             morton_code,
             quantize_by_boundaries,
         )
 
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
+        def zorder(rows: DataFrame) -> DataFrame:
+            # rank quantization: 2^bits - 1 approximate quantile cuts
+            # per column in ONE pass; only (cols × 2^bits) doubles
+            # reach the driver — metadata at any table size
+            n_cells = 1 << bits
+            probs = [i / n_cells for i in range(1, n_cells)]
+            cuts = rows.approxQuantile(
+                list(cols), probs, 1.0 / (4 * n_cells)
             )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        schema = self._schema_of(base_raw)
-        missing = [c for c in cols if c not in schema.names]
-        if not cols or missing:
-            raise ValueError(
-                f"rewrite_zorder: unknown columns {missing or cols}"
+            qs = [
+                quantize_by_boundaries(c, b) for c, b in zip(cols, cuts)
+            ]
+            # Materialize the quantized values behind a GENERATE
+            # boundary before Morton-interleaving: morton_code
+            # references each q expression `bits` times (one
+            # shiftright per bit), each q is a HOF fold over a
+            # 255-literal array, and HOFs are CodegenFallback —
+            # CollapseProject would inline the fold `bits`× per column
+            # per row (the plans/llm._with_tk trap, review r12).
+            # explode(array(struct)) pins ONE evaluation.
+            q_struct = F.explode(
+                F.array(
+                    F.struct(
+                        *[q.alias(f"q{i}") for i, q in enumerate(qs)]
+                    )
+                )
+            ).alias("__qs")
+            z = morton_code(
+                [F.col(f"__qs.q{i}") for i in range(len(qs))], bits
             )
-        non_numeric = [
-            c
-            for c in cols
-            if not isinstance(schema[c].dataType, T.NumericType)
-        ]
-        if non_numeric:
-            raise ValueError(
-                "rewrite_zorder: z-order columns must be numeric "
-                f"(got {non_numeric}); cast timestamps to epoch "
-                "numbers or dictionary-encode strings upstream"
-            )
-        base_bb = self._by_bucket(base_id)
-        touched = sorted(
-            bkt for bkt, loc in base_bb.items() if self._loc_n(loc)
-        )
-        if buckets is not None:
-            unknown = sorted(
-                set(buckets) - set(range(self.n_buckets))
-            )
-            if unknown:
+            return rows.select("*", q_struct).withColumn("__z", z)
+
+        def once() -> int:
+            base = self._base_state("rewrite_zorder", buckets=buckets)
+            schema = self._schema_of(base[1])
+            missing = [c for c in cols if c not in schema.names]
+            if not cols or missing:
                 raise ValueError(
-                    f"rewrite_zorder: unknown buckets {unknown} "
-                    f"(layout has {self.n_buckets})"
+                    f"rewrite_zorder: unknown columns {missing or cols}"
                 )
-            touched = sorted(set(touched) & set(buckets))
-        if not touched:
-            return base_id
-        ents = [
-            f
-            for bkt in touched
-            for f in self._entries(base_bb[bkt])
-        ]
-        cur = self._read_entries(ents, schema, spark=self.spark)
-        # rank quantization: 2^bits - 1 approximate quantile cuts per
-        # column in ONE pass; only (cols × 2^bits) doubles reach the
-        # driver — metadata at any table size
-        n_cells = 1 << bits
-        probs = [i / n_cells for i in range(1, n_cells)]
-        cuts = cur.approxQuantile(
-            list(cols), probs, 1.0 / (4 * n_cells)
-        )
-        qs = [
-            quantize_by_boundaries(c, b) for c, b in zip(cols, cuts)
-        ]
-        # Materialize the quantized values behind a GENERATE boundary
-        # before Morton-interleaving: morton_code references each q
-        # expression `bits` times (one shiftright per bit), each q is
-        # a HOF fold over a 255-literal array, and HOFs are
-        # CodegenFallback — CollapseProject would inline the fold
-        # `bits`× per column per row (the plans/llm._with_tk trap,
-        # review r12). explode(array(struct)) pins ONE evaluation.
-        q_struct = F.explode(
-            F.array(
-                F.struct(
-                    *[q.alias(f"q{i}") for i, q in enumerate(qs)]
+            non_numeric = [
+                c
+                for c in cols
+                if not isinstance(schema[c].dataType, T.NumericType)
+            ]
+            if non_numeric:
+                raise ValueError(
+                    "rewrite_zorder: z-order columns must be numeric "
+                    f"(got {non_numeric}); cast timestamps to epoch "
+                    "numbers or dictionary-encode strings upstream"
+                )
+            touched = sorted(
+                bkt
+                for bkt, loc in base[2].items()
+                if self._loc_n(loc) and (buckets is None or bkt in buckets)
+            )
+            return self._claim_or_rebase(
+                self._prepare_rewrite(
+                    "zorder", properties={"zorder.cols": ",".join(cols)},
+                    base=base, touched=touched,
+                    layout=(
+                        zorder, "__z", int(rows_per_file), ("__z", "__qs")
+                    ),
                 )
             )
-        ).alias("__qs")
-        z = morton_code(
-            [F.col(f"__qs.q{i}") for i in range(len(qs))], bits
-        )
-        new_files = self._stage_rewrite(
-            self._with_bucket(cur).select("*", q_struct).withColumn("__z", z),
-            len(touched), "__z", int(rows_per_file), scratch=("__z", "__qs"),
-        )
-        return self._claim_or_rebase(
-            self._build_delta(
-                base_raw["schema"], base_bb, {b: [] for b in touched},
-                operation="zorder", base_id=base_id,
-                properties={"zorder.cols": ",".join(cols)},
-                new_files=new_files,
-            )
-        )
+
+        return self._retry("rewrite_zorder", once, max_retries)
 
     def overwrite(
         self,
@@ -2055,19 +2143,13 @@ class SnapshotTable:
         properties: dict | None = None,
     ) -> "tuple[dict, int, dict]":
         """Everything OVERWRITE does up to — not including — the
-        commit claim (the :meth:`_prepare_append` contract); claimed
-        by :meth:`overwrite`, or as one member of a mixed-verb
+        commit claim (the :meth:`_prepare_rewrite` return contract);
+        claimed by :meth:`overwrite`, or as one member of a mixed-verb
         grouped transaction (:meth:`SnapshotGroup.apply_all` — e.g.
         an IVF posting rebalance committed in the same instant as its
         re-trained codebook). Never a no-op: overwriting with an
         empty frame EMPTIES the table."""
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
+        base_id, base_raw, base_bb = self._base_state()
         schema = self._schema_of(base_raw)
         missing = [c for c in schema.names if c not in df.columns]
         extra = [c for c in df.columns if c not in schema.names]
@@ -2083,7 +2165,6 @@ class SnapshotTable:
                 for f in schema.fields
             ]
         )
-        base_bb = self._by_bucket(base_id)
         # every existing bucket must be touched (its old files drop)
         # and every layout bucket may receive new rows
         touched = sorted(set(base_bb) | set(range(self.n_buckets)))
@@ -2256,18 +2337,12 @@ class SnapshotTable:
         no empty commit."""
         from pyspark import StorageLevel
 
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
+        base_id, base_raw, base_bb = self._base_state()
         if assignments is not None and not assignments:
             raise ValueError(
                 "update_where: empty assignments (a no-op rewrite "
                 "would still burn I/O and a history entry)"
             )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
         schema = self._schema_of(base_raw)
         if assignments:
             frozen = (
@@ -2294,7 +2369,6 @@ class SnapshotTable:
             }
         else:  # UPDATE SET *: every column from the matched source row
             sets = {c: F.col(f"__s_{c}") for c in schema.names}
-        base_bb = self._by_bucket(base_id)
         props = dict(properties or {})
         for k, v in audit.items():
             props.setdefault(k, v)
@@ -2349,7 +2423,7 @@ class SnapshotTable:
                 kept = {}
                 # the source's own session — inside foreachBatch the
                 # micro-batch belongs to a cloned session and a join
-                # must not cross sessions (the _prepare_merge rule)
+                # must not cross sessions (the _prepare_rewrite rule)
                 spark = frame.sparkSession
                 marked = src.select(
                     *[F.col(c).alias(f"__s_{c}") for c in cols],
@@ -2548,7 +2622,7 @@ class SnapshotTable:
                 # the MATCHED frame's session, not self.spark: inside
                 # foreachBatch the micro-batch belongs to a cloned
                 # session and a union must not cross sessions (the
-                # _prepare_merge rule; review r14)
+                # _prepare_rewrite rule; review r14)
                 to_write = to_write.unionByName(
                     self._dv_pairs(fold, spark=matched.sparkSession)
                 )
@@ -2925,147 +2999,6 @@ class SnapshotTable:
             c = F.col(k).eqNullSafe(F.col(f"{pref}{k}"))
             cond = c if cond is None else (cond & c)
         return cond
-
-    def _prepare_merge(
-        self,
-        batch_df: DataFrame,
-        tombstone_filter: str | None,
-        properties: dict | None = None,
-    ) -> "tuple[dict, int, dict] | int":
-        """Everything MERGE does up to — not including — the commit
-        claim (see :meth:`_prepare_append` for the contract); claimed
-        by :meth:`merge`, or as one member of a grouped transaction
-        (:meth:`SnapshotGroup.merge_all`)."""
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        base_bb: dict = {}
-        if base_id:
-            # Config + schema come from the RAW manifest (O(1) read)
-            # and file lists from the structurally-shared per-bucket
-            # view — the merge hot path must never materialize the
-            # flat O(F) files list (VERDICT r09 item 5). The on-disk
-            # layout is the truth: adopt the current manifest's bucket
-            # count so a handle constructed with a stale value (or
-            # racing a rebucket — the CAS retry re-enters here) can
-            # never mix layouts in one snapshot.
-            base_raw = self._raw_meta(base_id)
-            self._adopt_layout(base_raw)
-            base_bb = self._by_bucket(base_id)
-        # validated AFTER adoption (round 16 review: post-rename key/
-        # order names are the ones a batch must carry)
-        missing = [
-            c
-            for c in (*self.key_cols, self.order_col)
-            if c not in batch_df.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"merge: batch is missing key/order columns {missing}"
-            )
-
-        # Pin the bucketed batch across its TWO consumers (round 17,
-        # guide §5): the touched-bucket probe job and the staged
-        # write both execute the batch lineage — which for the
-        # incremental operators is itself a join/aggregation tree —
-        # so without the pin the batch is computed twice per merge.
-        # Released in the finally below; O(batch) memory-and-disk,
-        # exactly the bytes the merge already moves.
-        b = self._with_bucket(batch_df).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            touched = self._buckets_of(b)
-            if not touched:
-                # Empty batch: leave history clean (the caller's run
-                # is still checkpoint-tracked); first-ever commit
-                # records an empty snapshot so the table becomes
-                # readable. If the caller asked to stamp PROPERTIES,
-                # an existing table gets a metadata-only commit (all
-                # base files carried by reference, an O(1)-manifest
-                # delta with zero bucket entries) instead of a silent
-                # return — otherwise an IVM view's `reflects_base`
-                # watermark would lag on no-op batches and every later
-                # fold would walk changes() across a growing span,
-                # breaking latest_property's documented "stamped on
-                # every commit reads ONE manifest" fast path
-                # (ADVICE r08).
-                if base_id is not None and not properties:
-                    return base_id
-                return self._build_delta(
-                    base_raw["schema"]
-                    if base_id
-                    else b.drop("__bucket").schema.json(),
-                    base_bb, {}, operation="merge", base_id=base_id,
-                    properties=properties,
-                )
-            replaced = [
-                f
-                for bkt in touched
-                for f in self._entries(base_bb.get(bkt, []))
-            ]
-            if replaced:
-                # Use the batch's own session (inside foreachBatch the
-                # micro-batch frame belongs to a cloned session; a
-                # union must not cross sessions). Aligned to the BASE
-                # schema so files predating an earlier evolution read
-                # consistently.
-                cur = self._read_entries(
-                    replaced,
-                    self._schema_of(base_raw),
-                    spark=b.sparkSession,
-                )
-                # allowMissingColumns = ADDITIVE schema evolution: a
-                # batch with a new column widens the table (old rows
-                # read NULL); a batch from an old writer gets NULLs
-                # for newer columns. Same-name type conflicts fail
-                # loudly inside unionByName.
-                merged = self._with_bucket(cur).unionByName(
-                    b, allowMissingColumns=True
-                )
-            elif base_id:
-                # No touched bucket has existing files, but the table
-                # has a schema history: union against an EMPTY frame
-                # in the base manifest's schema so the recorded schema
-                # is always base ∪ batch. Without this, a batch from
-                # an old writer landing only in currently-empty
-                # buckets would NARROW the manifest schema and
-                # _aligned_read would silently drop the newer columns
-                # still present in carried-forward files — breaking
-                # the additive-evolution contract on exactly the path
-                # that skips the unionByName above.
-                empty_base = b.sparkSession.createDataFrame(
-                    [], self._schema_of(base_raw)
-                )
-                merged = self._with_bucket(empty_base).unionByName(
-                    b, allowMissingColumns=True
-                )
-            else:
-                merged = b
-            w = Window.partitionBy(*self.key_cols).orderBy(
-                F.col(self.order_col).desc()
-            )
-            latest = (
-                merged.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            if tombstone_filter is not None:
-                latest = latest.filter(f"NOT ({tombstone_filter})")
-            new_files = self._stage_rewrite(
-                latest, len(touched), self.order_col
-            )
-        finally:
-            b.unpersist()
-        # Touched buckets map to their new file lists — a bucket whose
-        # every row was tombstoned stages nothing and records [] (the
-        # emptied-bucket delta entry). Untouched buckets are carried
-        # BY REFERENCE through base_bb; nothing O(table) is built.
-        return self._build_delta(
-            latest.drop("__bucket").schema.json(), base_bb,
-            {bkt: [] for bkt in touched}, operation="merge",
-            base_id=base_id, properties=properties, new_files=new_files,
-        )
 
     def _promote_staged(self, staging: str, run: str) -> list[dict]:
         """Move staged bucket files to immutable names under data/;
@@ -4188,7 +4121,7 @@ class SnapshotTable:
         records its own ``n_buckets``, and ``read_keys`` prunes with
         the target snapshot's count), concurrent writers race on the
         same CAS (a merge that loses to a rebucket retries and adopts
-        the new layout via ``_prepare_merge``'s manifest-first rule),
+        the new layout via ``_base_state``'s manifest-first rule),
         and a crash leaves the old snapshot current. ``changes``
         across a rebucket boundary stays CORRECT but unpruned — every
         file path is new, so every bucket's list differs and both
@@ -4197,20 +4130,14 @@ class SnapshotTable:
         if new_n_buckets < 1:
             raise ValueError("rebucket: need at least one bucket")
         def once() -> int:
-            base_id = self.current_id()
-            if base_id is None:
-                raise ValueError(
-                    f"snapshot table {self.table_dir}: no commits"
-                )
+            # The base state adopts the manifest's BUCKET COLUMNS
+            # before rewriting — a stale handle (default bucket_cols =
+            # full key) would otherwise silently destroy a (band,
+            # bucket)-style layout split and break every read_matching
+            # prune downstream. Only the COUNT changes here; the
+            # column split is part of the table's access-path contract.
+            base_id, base_raw, _ = self._base_state()
             cur = self.read(snapshot_id=base_id)
-            # Adopt the manifest's BUCKET COLUMNS before rewriting —
-            # a stale handle (default bucket_cols = full key) would
-            # otherwise silently destroy a (band, bucket)-style layout
-            # split and break every read_matching prune downstream.
-            # Only the COUNT changes here; the column split is part of
-            # the table's access-path contract.
-            base_raw = self._raw_meta(base_id)
-            self._adopt_layout(base_raw)
             self.n_buckets = new_n_buckets
             new_files = self._stage_rewrite(
                 self._with_bucket(cur), new_n_buckets, None
@@ -4257,13 +4184,7 @@ class SnapshotTable:
         ``self._retired`` (always derived from ``base_raw``, never
         from handle state — retry-safe)."""
         def once() -> int:
-            base_id = self.current_id()
-            if base_id is None:
-                raise ValueError(
-                    f"snapshot table {self.table_dir}: no commits"
-                )
-            base_raw = self._raw_meta(base_id)
-            self._adopt_layout(base_raw)
+            base_id, base_raw, base_bb = self._base_state()
             schema_json = base_raw["schema"]
             if not self._last_fid:
                 # legacy table: first evolution upgrades it to fid
@@ -4283,7 +4204,7 @@ class SnapshotTable:
             try:
                 return self._claim_or_rebase(
                     self._build_delta(
-                        fn(st, base_raw).json(), self._by_bucket(base_id),
+                        fn(st, base_raw).json(), base_bb,
                         {}, operation="evolve", base_id=base_id,
                         properties={"evolve.op": label},
                     )
