@@ -6,7 +6,9 @@ spend their wall-clock across MANY Spark jobs; a single explain of
 the returned frame says nothing about where the time went. This
 runs the query once under the Spark UI's REST API and prints every
 job with its duration and description, slowest first — the
-guide-§1 "which stage is slow" loop for driver-sequenced queries.
+guide-§1 "which stage is slow" loop for driver-sequenced queries —
+and each repetition's Janino compile count and compile time (from
+Spark's ``CodegenMetrics`` and ``CodeGenerator.compileTime``).
 
 Usage: python scripts/profile_query.py <name> [sf_dir] [reps]
 """
@@ -30,6 +32,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from turnover_odata_etl_spark.session import CODEGEN_CACHE_ENTRIES
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.appName(f"profile-{name}")
@@ -45,6 +49,7 @@ def main() -> None:
             "true",
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
@@ -84,12 +89,23 @@ def main() -> None:
     # breakdown (review r16)
     first_job = len(json.load(urllib.request.urlopen(url)))
 
+    # Janino compiles (count, and total compile nanoseconds) so far in
+    # this JVM: a repeated query that still compiles has a plan shape
+    # the generated-class cache cannot reuse
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     best = float("inf")
-    for _ in range(reps):
+    for rep in range(reps):
         spark.catalog.clearCache()
+        n0 = compiles.getCount()
+        ns0 = codegen.compileTime()
         t0 = time.perf_counter()
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
+        wall = time.perf_counter() - t0
+        best = min(best, wall)
+        n = compiles.getCount() - n0
+        ms = (codegen.compileTime() - ns0) / 1e6
+        print(f"rep {rep}: {wall:.3f}s, {n} compiles, {ms:.0f} ms compiling", flush=True)
     print(f"TOTAL {name}: {best:.3f}s (min of {reps})", flush=True)
     if reps > 1:
         print(

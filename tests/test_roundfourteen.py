@@ -1,36 +1,12 @@
-"""Round-14 queries (plans/roundfourteen.py) — oracle parity.
-Registered round 15 per the r14 cap ruling (cap 215 -> 218, frozen
-there). Mechanism deep-dives live in tests/test_snapshot_dv.py /
-test_snapshot_wap.py / test_ivf_refresh.py."""
+"""Round-14 queries (plans/roundfourteen.py): registration and the
+dv-delete contract row. Their oracle comparisons run in
+tests/test_oracle_parity.py; mechanism deep-dives live in
+tests/test_snapshot_dv.py / test_snapshot_wap.py /
+test_ivf_refresh.py."""
 
 from __future__ import annotations
 
-import duckdb
-
-from .oracle_utils import compare_spark_vs_oracle
-from turnover_odata_etl_spark.plans.roundfourteen import (
-    DV_DELETE_ORACLE,
-    IVF_REFRESH_ORACLE,
-    WAP_ORACLE,
-    s_knn_ivf_refresh,
-    s_snapshot_dv_delete,
-    s_snapshot_wap_publish,
-)
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def _con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
+from turnover_odata_etl_spark.plans.roundfourteen import s_snapshot_dv_delete
 
 
 def test_roundfourteen_is_registered_with_eager_oracles():
@@ -48,33 +24,6 @@ def test_roundfourteen_is_registered_with_eager_oracles():
         assert name in specs, name
         assert specs[name].oracle and specs[name].oracle.strip()
     assert len(specs) == 221  # the frozen cap (r15 ruling)
-
-
-def test_dv_delete_query_matches_oracle(spark, sf_dir):
-    compare_spark_vs_oracle(
-        s_snapshot_dv_delete(spark, sf_dir),
-        _con(sf_dir),
-        DV_DELETE_ORACLE,
-        "s_snapshot_dv_delete",
-    )
-
-
-def test_ivf_refresh_query_matches_oracle(spark, sf_dir):
-    compare_spark_vs_oracle(
-        s_knn_ivf_refresh(spark, sf_dir),
-        _con(sf_dir),
-        IVF_REFRESH_ORACLE,
-        "s_knn_ivf_refresh",
-    )
-
-
-def test_wap_publish_query_matches_oracle(spark, sf_dir):
-    compare_spark_vs_oracle(
-        s_snapshot_wap_publish(spark, sf_dir),
-        _con(sf_dir),
-        WAP_ORACLE,
-        "s_snapshot_wap_publish",
-    )
 
 
 def test_dv_delete_contract_row_pins_zero_rewrites(spark, sf_dir):

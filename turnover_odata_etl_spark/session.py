@@ -6,6 +6,17 @@ pandas/Python interchange for the few Pandas-UDF operators), UTC
 session timezone (determinism vs. the DuckDB oracle), shuffle
 partitions sized to the local core count rather than the 200 default.
 
+Spark caches the classes its whole-stage code generator compiles,
+keyed by the generated source, but by default it keeps only 100 of
+them (``spark.sql.codegen.cache.maxEntries``). The engine's working
+set is larger: one pass of every ``SnapshotTable``/``SnapshotGroup``
+verb, pruned, time-travel and change-feed read and one IVM
+micro-batch compiles about 260 distinct classes. Under the default
+cap a repeated plan shape finds its class evicted and compiles it
+again (about 195 compiles in a timed pass that follows a warm-up of
+every verb, about 80 with the cap raised), so the cap is sized well
+above that working set.
+
 On a real cluster these same settings hold; only ``master`` and the
 memory knobs change (they come from spark-submit, not from here).
 """
@@ -17,6 +28,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# ~4x the ~260 distinct classes one pass over every storage verb
+# compiles, so repeated plan shapes are never evicted between uses; an
+# entry is one loaded class, a few KB to tens of KB of metaspace
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -52,6 +67,9 @@ def get_spark(
             "true",
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-class cache, sized in the module docstring (a
+        # static conf: read once, when the JVM's code generator starts).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Fixture-encoding armor: earlier fixture generations stored
         # events.ts as TIMESTAMP(NANOS), which Spark's vectorized reader

@@ -2402,13 +2402,16 @@ class SnapshotTable:
                     src = src.dropDuplicates(self.key_cols)
                 src = src.persist(StorageLevel.MEMORY_AND_DISK)
                 pinned.append(src)
+                # one aggregate, no limit: a limit's generated code
+                # names its counter from a JVM-wide sequence, so a
+                # limit probe would compile new classes on every call
                 if source is not None and (
                     src.groupBy(*self.key_cols)
                     .agg(F.count(F.lit(1)).alias("__n"))
-                    .filter(F.col("__n") > 1)
-                    .limit(1)
-                    .count()
-                ):
+                    .agg(F.max("__n"))
+                    .collect()[0][0]
+                    or 0
+                ) > 1:
                     raise ValueError(
                         "merge_into: source has duplicate keys — SQL "
                         "MERGE requires at most one source row per "
