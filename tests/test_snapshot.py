@@ -11,6 +11,7 @@ snapshot intact.
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -401,6 +402,85 @@ def test_changes_reads_only_changed_buckets(spark, tdir, monkeypatch):
         if any(p.endswith(f["path"]) for p in opened)
     }
     assert opened_buckets == changed
+
+
+def test_changes_after_append_scans_only_new_files(spark, tdir, monkeypatch):
+    """An append of new keys only adds files: its CDC read opens just
+    those files and joins nothing, and reports each new row as an
+    insert in both output forms."""
+    t = make_table(spark, tdir, n_buckets=4)
+    t.merge(batch(spark, [(i, "x", 1) for i in range(40)]))
+    t.append(batch(spark, [(i, f"n{i}", 2) for i in range(100, 120)]))
+    m1, m2 = t._manifest(1), t._manifest(2)
+    old = {f["path"] for f in m1["files"]}
+    added = {f["path"] for f in m2["files"]} - old
+    opened = []
+    real_parquet = type(spark.read).parquet
+
+    def spy(reader, *paths):
+        opened.extend(paths)
+        return real_parquet(reader, *paths)
+
+    monkeypatch.setattr(type(spark.read), "parquet", spy)
+    want = [(i, f"n{i}", 2, "insert") for i in range(100, 120)]
+    for pre in (False, True):
+        df = t.changes(1, 2, include_preimages=pre)
+        assert "Join" not in df._jdf.queryExecution().optimizedPlan().toString()
+        assert sorted(
+            (r["k"], r["v"], r["ver"], r["_change_type"]) for r in df.collect()
+        ) == want
+    assert {os.path.relpath(p, tdir) for p in opened} == added
+
+
+def test_changes_after_append_of_existing_key_joins(spark, tdir):
+    """An appended file whose key range overlaps an old file's is not
+    proven new, so its bucket takes the join: an appended duplicate
+    of a live key still reads as an update."""
+    t = make_table(spark, tdir, n_buckets=1)
+    t.merge(batch(spark, [(1, "a", 1), (5, "b", 1)]))
+    t.append(batch(spark, [(3, "c", 2), (9, "d", 2)]))  # overlaps [1, 5]...
+    t.append(batch(spark, [(5, "B", 3)]))  # ...and a live key
+    got = sorted(
+        (r["k"], r["v"], r["_change_type"]) for r in t.changes(1, 3).collect()
+    )
+    assert got == [(3, "c", "insert"), (5, "B", "update"), (9, "d", "insert")]
+
+
+def test_only_appended_needs_proof():
+    """The append path's proof on manifest entries alone: old entries
+    unchanged, new entries key-disjoint by footer stats, old entries
+    free of NULL keys; anything unproven takes the join."""
+    t = SimpleNamespace(key_cols=["k"])
+    t._file_test = lambda bounds: SnapshotTable._file_test(t, bounds)
+
+    def e(lo=None, hi=None, nulls=0, dv=None):
+        f = {"bucket": 0, "rows": 1}
+        if lo is not None:
+            f["stats"] = {"k": [lo, hi]}
+        if nulls is not None:
+            f["nulls"] = {"k": nulls}
+        if dv is not None:
+            f["dv"] = {"n": 1, "sidecars": [dv]}
+        return f
+
+    only = SnapshotTable._only_appended
+    old = {"p1": e(0, 9)}
+    assert only(t, old, {**old, "p2": e(10, 19)})
+    assert only(t, {}, {"p2": e()})  # a bucket that had no files
+    assert not only(t, old, {**old, "p2": e(5, 19)})  # ranges overlap
+    assert not only(t, old, {**old, "p2": e()})  # new entry: no stats
+    assert not only(t, {"p1": e()}, {"p1": e(), "p2": e(10, 19)})
+    assert not only(t, {"p1": e(0, 9, nulls=1)},
+                    {"p1": e(0, 9, nulls=1), "p2": e(10, 19)})
+    assert not only(t, {"p1": e(0, 9, nulls=None)},
+                    {"p1": e(0, 9, nulls=None), "p2": e(10, 19)})
+    assert not only(t, old, {"p1": e(0, 9, dv="s1"), "p2": e(10, 19)})
+    assert not only(t, old, {"p2": e(10, 19)})  # p1 was rewritten away
+    # strings: a prefix-truncated upper bound (None = unbounded) never
+    # proves disjointness above it
+    s_old = {"p1": e("a", None)}
+    assert not only(t, s_old, {**s_old, "p2": e("b", "c")})
+    assert only(t, {"p1": e("a", "b")}, {"p1": e("a", "b"), "p2": e("c", "d")})
 
 
 def test_changes_preimage_form(spark, tdir):

@@ -221,6 +221,17 @@ def _stats_overlap(s, lo, hi) -> bool:
     if hi is not None and s_lo > hi:
         return False
     return True
+
+
+def _union_all(*frames):
+    """``unionByName`` of the frames that are not ``None``, in order."""
+    out = None
+    for df in frames:
+        if df is not None:
+            out = df if out is None else out.unionByName(df)
+    return out
+
+
 _PRED_RANGE = re.compile(
     r"^\s*([A-Za-z_][A-Za-z0-9_]*)\s+BETWEEN\s+(-?\d+(?:\.\d+)?)"
     r"\s+__BAND__\s+(-?\d+(?:\.\d+)?)\s*$",
@@ -1340,7 +1351,18 @@ class SnapshotTable:
         joins. (Like the join path, keyed net-change semantics
         presuppose the keep-latest invariant: on a table holding
         replayed duplicate keys, run ``compact(dedup_keys=True)``
-        before trusting keyed CDC from either path.)"""
+        before trusting keyed CDC from either path.)
+
+        Append fast path: when both snapshots share one bucket layout,
+        a changed bucket that only GAINED entries (every from-side
+        entry still there with the same deletion vector) whose new
+        entries footer stats prove key-disjoint from the old ones
+        (:meth:`_only_appended`) holds the from-side rows plus new
+        keys, so the join would report exactly the new rows, each an
+        ``insert``. Those buckets read as one scan of the new
+        entries: the old entries are never opened and nothing joins.
+        An ``append`` of new keys, and a group's ``append_all``, take
+        this path."""
         sid_to = self.current_id() if to_id is None else to_id
         m_from, m_to = self._manifest(from_id), self._manifest(sid_to)
         schema = self._schema_of(m_to)
@@ -1380,7 +1402,35 @@ class SnapshotTable:
                 for p, tf in tmap.get(b, {}).items()
             )
         }
-        rewritten = changed - dv_only
+
+        def layout(m: dict):
+            return (
+                m["n_buckets"],
+                list(m["key_cols"]),
+                list(m.get("bucket_cols") or m["key_cols"]),
+            )
+
+        # a key's rows share one bucket on both sides only when both
+        # snapshots bucket alike (a rebucket moves keys between them)
+        appended = set()
+        if layout(m_from) == layout(m_to):
+            appended = {
+                b
+                for b in changed - dv_only
+                if self._only_appended(fmap.get(b, {}), tmap.get(b, {}))
+            }
+        rewritten = changed - dv_only - appended
+        inserts = None
+        if appended:
+            inserts = self._read_entries(
+                [
+                    tf
+                    for b in appended
+                    for p, tf in tmap[b].items()
+                    if p not in fmap.get(b, {})
+                ],
+                schema,
+            ).withColumn("_change_type", F.lit("insert"))
         fast = None
         if dv_only:
             # file-grain prune (review r14-2): scan only the entries
@@ -1425,7 +1475,7 @@ class SnapshotTable:
                 new, on=self.key_cols, how="full_outer"
             ).filter(~F.col("__old").eqNullSafe(F.col("__new")))
         if j is None:
-            return fast
+            return _union_all(fast, inserts)
         if include_preimages:
             def tagged(img: str, t: str):
                 return F.struct(
@@ -1468,7 +1518,41 @@ class SnapshotTable:
                 *[image[c].alias(c) for c in non_key],
                 change_type.alias("_change_type"),
             ).select(*schema.fieldNames(), "_change_type")
-        return slow if fast is None else slow.unionByName(fast)
+        return _union_all(slow, fast, inserts)
+
+    def _only_appended(self, olds: dict, news: dict) -> bool:
+        """Is a changed bucket's to-side its from-side plus new rows
+        under new keys? True when every from-side entry (``olds``,
+        path → entry) is still on the to-side (``news``) with the same
+        deletion vector, and every entry the to-side adds is proven
+        key-disjoint from each from-side entry: the shared per-file
+        test (:meth:`_file_test`), bounded by the added entry's key
+        ranges, proves the old entry cannot hold one of its keys. The from-side entries must also
+        record zero NULL keys: the diff join never matches a NULL key,
+        so it reports every NULL-keyed row of a rewritten bucket as a
+        delete plus an insert. Missing stats or null counts degrade to
+        the join, never to a wrong answer."""
+
+        def sidecars(f: dict):
+            return (f.get("dv") or {}).get("sidecars")
+
+        if any(
+            p not in news or sidecars(news[p]) != sidecars(f)
+            for p, f in olds.items()
+        ):
+            return False
+        for o in olds.values():
+            nulls = o.get("nulls") or {}
+            if any(nulls.get(k) != 0 for k in self.key_cols):
+                return False
+        for a in (f for p, f in news.items() if p not in olds):
+            sa = a.get("stats") or {}
+            may_hold = self._file_test(
+                {k: tuple(sa[k]) for k in self.key_cols if sa.get(k) is not None}
+            )
+            if any(may_hold(o) for o in olds.values()):
+                return False
+        return True
 
     def _dv_delta_rows(
         self,
